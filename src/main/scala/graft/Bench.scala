@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: times every registered query at the given SF
   * and prints one JSON line. A small warmup (table footers + a trivial
@@ -109,6 +110,19 @@ object Bench {
 
   private[graft] def captureLastExecution(spark: SparkSession): ExecutionCapture =
     new ExecutionCapture(spark)
+
+  /** Build-once artifacts (IVF/PQ indexes, derived tables), run before
+    * any timed or dumped query. A failure ends the run non-zero: going
+    * on would silently move the index build into s04's timing. */
+  private[graft] def prepareOrExit(spark: SparkSession, sfDir: String,
+                                   tag: String): Unit =
+    try Queries.prepare(spark, sfDir)
+    catch { case NonFatal(e) =>
+      System.err.println(s"[$tag] prepare failed: $e")
+      e.printStackTrace()
+      spark.stop()
+      sys.exit(1)
+    }
 
   /** Children with AQE/stage wrappers resolved, so traversal reaches
     * the runtime-final operators instead of stopping at the
@@ -309,45 +323,15 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r18 (guide §2.2/§2.5): AQE's coalescing floor. The default
-      // 1 MB minPartitionSize assumes bytes ≈ work; the text/vector
-      // operators here do 100x more CPU per byte (tokenize, array
-      // intersect, window sort), so a few-MB shuffle coalesced to 1-8
-      // partitions serializes a CPU-heavy stage on an idle box. With
-      // parallelismFirst (default on) the target is already
-      // total/defaultParallelism — the floor below keeps that
-      // core-derived target in charge instead of overriding it at
-      // small shuffle sizes (256 KB measured best: 64 KB over-split
-      // d12's distinct aggregations, 1 MB serialized d19/q67). At production shuffle sizes the floor
-      // never binds (total/cores >> 64k), so the setting is inert at
-      // 100 TB. Env-parameterised; same value wired in Verify/PlanDump
-      // so measured plans match verified plans.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "262144"))
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession()
     // warmup: touch every table (footer + listing), run one tiny job
     graft.sources.Tables.all.foreach { t =>
       try graft.sources.Tables(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup of $t failed: $e") }
     }
-    // build-once artifacts (IVF index): outside the timed loop, so the
-    // timed s04 is the production probe rather than index construction
-    try Queries.prepare(spark, sfDir)
-    catch { case e: Throwable =>
-      // non-fatal (s04 rebuilds its index inline), but say so — a
-      // silent prepare failure would shift build cost into s04's timing.
-      // e.toString, not getMessage: an NPE would print "null"
-      System.err.println(s"[bench] prepare failed: $e")
-    }
+    prepareOrExit(spark, sfDir, "bench")
     // median-of-N per query: single-run numbers on this box swing by
     // seconds run-to-run (GC, page cache, task-schedule jitter), which
     // made real 2x regressions indistinguishable from noise in r1/r2.
@@ -366,7 +350,7 @@ object Bench {
     def calibration(): Double = {
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0L, 20000000L, 1L, cpus.toInt)
+        spark.range(0L, 20000000L, 1L, cpus)
           .selectExpr("id % 997 AS k", "id")
           .groupBy("k").sum("id")
           .write.format("noop").mode("overwrite").save()
@@ -377,7 +361,7 @@ object Bench {
     // Second calibration AXIS (r16): a shuffle/memory-bound sort probe.
     // The round-16 box read the SAME cpu calibration as r15's steady
     // box (0.16-0.19) while every query — including ones untouched for
-    // rounds — ran a uniform 1.5-2x slower in ISOLATED Scratch probes:
+    // rounds — ran a uniform 1.5-2x slower in ISOLATED single-query runs:
     // host memory/shuffle bandwidth shifted under an unchanged CPU
     // shape, and the cpu-only probe could not see it. A full sort of
     // 30M keyed rows (range-partitioner sample + exchange + external
@@ -385,7 +369,7 @@ object Bench {
     def sortCalibration(): Double = {
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0L, 30000000L, 1L, cpus.toInt)
+        spark.range(0L, 30000000L, 1L, cpus)
           .selectExpr("id * 2654435761 % 1000003 AS k", "id")
           .sort("k")
           .write.format("noop").mode("overwrite").save()
@@ -523,7 +507,7 @@ object Bench {
     // those fields still live in the fat BENCH_LAST.json record below,
     // which is byte-compatible with every prior round's artifact.
     val line = renderCompactJson(results, failed.toSeq, sfDir,
-      cpus.toInt, reran.toSeq)
+      cpus, reran.toSeq)
     // the FULL artifact (adds the per-rep spread) goes to the file the
     // judge reads — no 2000-char stdout-tail constraint there. ONLY
     // full-surface runs may write it: an SPARK_GRAFT_BENCH_ONLY debug

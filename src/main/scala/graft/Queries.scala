@@ -32,7 +32,8 @@ object Queries {
     * groups → trivially broadcastable result. Sums use the long-scaled
     * exact form (Exact.dsumL): same bit-exact cross-engine result as
     * the DECIMAL(18,4) casts, but the hot loop is a codegen'd 64-bit
-    * add — ~2.5× faster on this aggregate (Scratch `_dsuml_exp`). */
+    * add — ~2.5× faster on this aggregate (measured in round 3; the
+    * parity argument is restated in OPTIMIZATION_r18.md Finding 1). */
   val q01 = q("q01_pricing_summary",
     s"""SELECT l_returnflag, l_linestatus,
        | ${dsumLSql("l_quantity")} AS sum_qty,
@@ -1207,7 +1208,8 @@ object Queries {
     * threshold (inverted-index spelling, see below) — equality holds
     * because LSH recall at j ≥ 0.5 is ~1 (16 bands × 2 rows; the
     * corpus is bimodal, dups ≥ 0.75 vs noise ≤ 0.15; asserted against
-    * the full join in DedupSpec and `Scratch _neardup_parity`). */
+    * the full join in DedupSpec at sf0.01; TESTDATA.md records the
+    * same check on the 10× replica). */
   val d05 = q("d05_ngram_jaccard_pairs",
     """WITH d AS (SELECT doc_id,
       |  list_distinct(CASE WHEN len(t) >= 3
@@ -2343,6 +2345,23 @@ object Queries {
     * one per fingerprint, and the Spark count job runs OUTSIDE the map
     * (plain get, then put), never inside a ConcurrentHashMap bin
     * lock. */
+  /** q70 recursion stride K (OPTIMIZATION_r19.md Finding 3). Every
+    * recursion level is a FULL pass over seqd, so stride K cuts the
+    * pass count — and the per-level UnionLoop plan/schedule floor —
+    * from depth to ceil(depth/K): measured 3.3 s → 0.67 s at sf0.1
+    * (depth 25, K=5, 32c), rows exactly identical (integer prefix sums
+    * are associative, so cum_l ≡ the chained accumulation
+    * bit-for-bit). K=5 keeps ≥ 5 genuine UnionLoop iterations at every
+    * SF (depth is 25 everywhere); K=1 is the classic one-step walk. */
+  private val Q70Stride = 5
+
+  /** q70's seqd checkpoint is coalesced to cores / this many partitions
+    * (OPTIMIZATION_r18.md Finding 5): every recursion level maps once
+    * over seqd probing the broadcast frontier, and at the window's
+    * shuffle.partitions width that was levels × partitions near-empty
+    * tasks (25 × 32 at sf0.1; task overhead, not work). */
+  private val Q70LevelPassDivisor = 4
+
   private val q70FrontierCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]
   val q70 = q("q70_recursive_chains", q70Sql) { (s, dir) =>
@@ -2359,22 +2378,14 @@ object Queries {
     // exists to exercise WITH RECURSIVE (UnionLoop) itself.
     val fp = graft.sources.DerivedTables.sourceFingerprint(dir, "orders")
     val seqd = {
+      // explicit ROWS frame: cum_l is then the prefix sum over exactly
+      // the rows up to this one in (o_orderdate, o_orderkey) order — the
+      // recursion's chained accumulation — by construction rather than
+      // by the order key being tie-free under the default RANGE frame
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      // r18: every recursion LEVEL maps once over this table probing
-      // the broadcast frontier — with the window's shuffle.partitions
-      // partitioning that was levels × partitions near-empty tasks
-      // (25 × 32 at sf0.1; task overhead, not work). Coalesce the
-      // checkpoint to a handful of level-pass partitions; the conf
-      // (default cores/4) scales the per-level pass back up when the
-      // per-partition slice of orders stops being trivial.
-      // toIntOption + clamp: a malformed or non-positive conf value
-      // falls back to the scale-adaptive default instead of blowing up
-      // coalesce() at runtime
-      val levelParts = s.conf
-        .getOption("spark.graft.q70.seqdPartitions")
-        .flatMap(_.toIntOption).filter(_ >= 1)
-        .getOrElse(math.max(1, s.sparkContext.defaultParallelism / 4))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
       // r19: cum_l (per-customer prefix sum, same window pass as rn —
       // integer adds, so it equals the recursion's accumulation
       // bit-for-bit) lets each recursion level emit a RANGE of
@@ -2385,7 +2396,7 @@ object Queries {
           row_number().over(w).cast("long").as("rn"),
           sum(round(col("o_totalprice") * 10000.0).cast("long")).over(w)
             .as("cum_l"))
-        .coalesce(levelParts)
+        .coalesce(math.max(1, s.sparkContext.defaultParallelism / Q70LevelPassDivisor))
         .localCheckpoint(false)
     }
     val frontierRows = q70FrontierCache.get(dir) match {
@@ -2409,30 +2420,20 @@ object Queries {
     val frontierLimit = s.conf.getOption("spark.graft.q70.broadcastFrontierLimit")
       .map(_.toLong).getOrElse(4000000L)
     val hint = if (frontierRows <= frontierLimit) "/*+ BROADCAST(c) */ " else ""
-    // STRIDE-K recursion (r19, VERDICT #8): each level's join emits K
-    // chain positions per customer (range probe of the frontier; the
-    // running total reads the precomputed prefix sum, so no per-step
-    // chaining is needed) and only the (c.rn + K)th row advances the
-    // frontier (`adv`). Every recursion level is a FULL pass over
-    // seqd, so stride K cuts the pass count — and the per-level
-    // UnionLoop plan/schedule floor — from depth to ceil(depth/K):
-    // measured 3.3 s → 0.67 s at sf0.1 (depth 25, K=5, 32c), rows
-    // exactly identical (Scratch _q70_stride, 3-rep + collect
-    // compare; integer prefix sums are associative, so cum_l ≡ the
-    // chained accumulation bit-for-bit). K=5 keeps ≥ 5 genuine
-    // UnionLoop iterations at every SF (depth is 25 everywhere);
-    // K=1 reproduces the classic one-step walk.
-    val stride = s.conf.getOption("spark.graft.q70.stride")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(5)
+    // STRIDE-K recursion: each level's join emits K chain positions
+    // per customer (range probe of the frontier; the running total
+    // reads the precomputed prefix sum, so no per-step chaining is
+    // needed) and only the (c.rn + K)th row advances the frontier
+    // (`adv`). See [[Q70Stride]].
     s.sql(
       s"""WITH RECURSIVE chain(o_custkey, o_orderkey, rn, running_l, adv) AS (
         | SELECT o_custkey, o_orderkey, rn, cum_l, true FROM seqd WHERE rn = 1
         | UNION ALL
         | SELECT ${hint}s.o_custkey, s.o_orderkey, s.rn, s.cum_l,
-        |  s.rn = c.rn + $stride
+        |  s.rn = c.rn + $Q70Stride
         | FROM chain c JOIN seqd s
         |  ON s.o_custkey = c.o_custkey AND c.adv
-        |  AND s.rn BETWEEN c.rn + 1 AND c.rn + $stride)
+        |  AND s.rn BETWEEN c.rn + 1 AND c.rn + $Q70Stride)
         |SELECT o_custkey, o_orderkey, rn,
         | CAST(running_l AS DOUBLE) / 10000.0 AS running
         |FROM chain""".stripMargin)

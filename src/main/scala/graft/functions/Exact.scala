@@ -43,7 +43,8 @@ object Exact {
     * as a scaled 64-bit integer, sum the integers, divide once. Same
     * associativity/exactness as the decimal sums, but the hot loop is a
     * codegen'd long add instead of a 128-bit decimal add — measured
-    * ~2.5× faster on the q01 aggregate (Scratch `_dsuml_exp`).
+    * ~2.5× faster on the q01 aggregate (measured in round 3; the
+    * parity argument is restated in OPTIMIZATION_r18.md Finding 1).
     *
     * Cross-engine equality: both engines compute the SAME IEEE product
     * `x * 10^scale`, and scale-0 rounding of a given double agrees

@@ -1945,7 +1945,7 @@ object TextAnalysis {
     def wDf: Option[DataFrame] = w.map(_.toDF("bucket", "w"))
     val trajectory = Seq.newBuilder[LogisticModel]
     for (r <- 1 to rounds) {
-      // r18 (measured in Scratch `_lr_round_exp`, outputs proved
+      // r18 (OPTIMIZATION_r18.md Finding 1; outputs proved
       // bit-identical): (a) the per-round sums ride the LONG-SCALED
       // exact form — every addend is a 6dp decimal by construction
       // (weights and c are round(·, 6)) and the scaled per-group sums
@@ -1977,15 +1977,9 @@ object TextAnalysis {
         case Some(prev) => g.join(broadcast(prev), Seq("bucket"), "left")
           .withColumn("w", coalesce(col("w"), lit(0.0)))
       }
-      val t0 = System.nanoTime()
       w = Some(withPrev.select(col("bucket"),
         round(col("w") - (lit(lr) * col("g")) / lit(nDocs), 6).as("w"))
         .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1))))
-      // dev trace (env-gated, off in every gate/bench path): per-round
-      // wall time of the collect that drives the whole round's DAG
-      if (sys.env.contains("GRAFT_LR_TRACE"))
-        System.err.println(
-          f"[lr-trace] round $r ${(System.nanoTime() - t0) / 1e9}%.3f s")
       trajectory += LogisticModel(w.get.toMap, nBuckets, nDocs, r, lr)
     }
     trajectory.result()

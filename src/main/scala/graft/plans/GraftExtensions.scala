@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   graft_shingles(tokens, n)                  → array<string>
   *   graft_jaccard(a, b)                        → double
   *   graft_intersect_count(a, b)                → bigint
+  *   graft_sorted_intersect_count(a, b)         → bigint (a, b sorted + distinct)
   *   graft_minhash_portable(tokens, shingleN, numHashes) → array<bigint>
   *   graft_simhash_portable(tokens)             → bigint
   *
@@ -63,8 +64,14 @@ object GraftExtensions {
         "graft_intersect_count"),
       (args: Seq[Expression]) => ArrayIntersectCount(args.head, args(1))),
     ("graft_sorted_intersect_count",
-      new ExpressionInfo(classOf[SortedLongIntersectCount].getName,
-        "graft_sorted_intersect_count"),
+      new ExpressionInfo(classOf[SortedLongIntersectCount].getName, null,
+        "graft_sorted_intersect_count",
+        "_FUNC_(a, b) - |a ∩ b| for two array<bigint>. Both arrays must " +
+          "be sorted ascending and element-distinct, e.g. " +
+          "sort_array(array_distinct(x)); this is not checked, and other " +
+          "inputs give a wrong count. graft_intersect_count has no " +
+          "precondition.",
+        "", "", "", "", "", "", ""),
       (args: Seq[Expression]) => SortedLongIntersectCount(args.head, args(1))),
     ("graft_minhash_portable",
       new ExpressionInfo(classOf[MinHashShinglePortable].getName, "graft_minhash_portable"),

@@ -88,29 +88,22 @@ object Tables {
     *  - At production scale files carry many row groups, so the rule
     *    self-disables: plain scan, zero overhead. Key distributions
     *    are unique-ish (≥ 150k orderkeys, 5k doc_ids against ≤ 32-way
-    *    fan-out), so hash balance holds (guide §2.5).
-    *
-    * Env `SPARK_GRAFT_SCAN_FANOUT`: `auto` (default) | `off` | an
-    * integer forcing K. */
+    *    fan-out), so hash balance holds (guide §2.5). */
   private def fanOut(spark: SparkSession, df: DataFrame, name: String,
                      path: String): DataFrame = {
-    val mode = sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "auto")
-    if (mode == "off") return df
     val keyOpt = fanOutKey.get(name)
     if (keyOpt.isEmpty) return df
     val key = keyOpt.get
     val par = spark.sparkContext.defaultParallelism
-    val forced = mode.toIntOption
     val meta =
       try fileMetaOf(spark, path)
       // unreadable footer: plain scan. NonFatal only — swallowing OOM/
       // LinkageError here would mask a real failure as a perf change.
       catch { case scala.util.control.NonFatal(_) => return df }
-    val auto = meta.rowGroups < math.max(par / 2, 1) &&
+    val fire = meta.rowGroups < math.max(par / 2, 1) &&
       meta.bytes >= 256L * 1024
-    val k = forced.getOrElse(
-      math.min(par.toLong, math.max(1L, meta.rows / 150L)).toInt)
-    if ((forced.isEmpty && !auto) || k <= 1) df
+    val k = math.min(par.toLong, math.max(1L, meta.rows / 150L)).toInt
+    if (!fire || k <= 1) df
     else df.repartition(k, org.apache.spark.sql.functions.col(key))
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Concurrent-query posture probe — the multiplexed-deployment shape
   * Bench's sequential loop doesn't cover: N parallel query STREAMS
   * against ONE SparkSession with the FAIR scheduler, each stream its
@@ -52,17 +50,7 @@ object ConcurrentBench {
       .split(",").map(_.trim.toInt).toSeq
     require(widths.nonEmpty && widths.forall(_ >= 1),
       s"stream widths must be >= 1: $widths")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_conc_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(conf = Seq("spark.scheduler.mode" -> "FAIR"))
     val fns = graft.SparkEntry.queries
     val missing = Mix.filterNot(fns.contains)
     require(missing.isEmpty, s"unknown mix queries: $missing")

@@ -1683,18 +1683,11 @@ object EdgeRunner {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // recall-check reads catalog tables: point the session at the
-    // warehouse the index was persisted into
-    val spark = (if (cfg.warehouse.nonEmpty)
-      builder.config("spark.sql.warehouse.dir", cfg.warehouse)
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // warehouse the index was persisted into. Without --warehouse keep
+    // Spark's default ./spark-warehouse, so managed tables outlive the run
+    val spark = graft.GraftSession(master = sys.env.get("SPARK_GRAFT_MASTER"),
+      warehouse = Some(if (cfg.warehouse.nonEmpty) cfg.warehouse else "spark-warehouse"))
     try run(spark, cfg) finally spark.stop()
   }
 }

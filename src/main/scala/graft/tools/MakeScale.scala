@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor replicator for the builder-side sf1+ bench probes:
@@ -41,14 +41,8 @@ object MakeScale {
     val Array(src, dest, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cores
+    val spark = graft.GraftSession()
 
     def replicate(table: String, keyCols: Seq[String],
                   extra: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {
@@ -72,7 +66,7 @@ object MakeScale {
           d.withColumn(k, col(k) + lit(i * Stride))
         }
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/$table.parquet")
       val n = spark.read.parquet(s"$dest/$table.parquet").count()
       println(s"[makescale] $table: ${df.count()} x $factor -> $n rows")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev aid for the bench work-metrics axis: writes the NORMALIZED
   * AQE-final plan text of named queries to files, so a fingerprint
@@ -11,21 +11,8 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (outDir, sfDir, names) = (args(0), args(1), args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep AQE coalescing identical to Bench (see Bench.scala r18
-      // note) so verified/dumped plans match measured plans
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "262144"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_pd_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try graft.Queries.prepare(spark, sfDir) catch { case _: Throwable => () }
+    val spark = graft.GraftSession()
+    graft.Bench.prepareOrExit(spark, sfDir, "plandump")
     val holder = graft.Bench.captureLastExecution(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
@@ -57,7 +44,7 @@ object PlanDump {
             println(s"[plandump] $n: no completed execution captured, skipped")
         }
       } catch {
-        case e: Throwable => println(s"[plandump] $n FAILED: $e")
+        case NonFatal(e) => println(s"[plandump] $n FAILED: $e")
       } finally spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -17,17 +17,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nEvents = if (args.length > 0) args(0).toLong else 5000000L
     val nDocs = if (args.length > 1) args(1).toLong else 50000L
-    // same knob as Bench; default stays the measured local[32] shape
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_smoke_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val vocab = Seq("the", "fast", "key", "order", "sort", "table", "scan",

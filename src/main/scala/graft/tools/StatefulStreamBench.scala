@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -37,14 +36,7 @@ object StatefulStreamBench {
     val nEvents = if (args.length > 1) args(1).toLong else 2000000L
     val nFiles = if (args.length > 2) args(2).toInt else 16
     val batches = if (args.length > 3) args(3).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val work = java.nio.file.Files.createTempDirectory("graft_stbench")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -39,14 +38,7 @@ object StreamBench {
     val nFiles = if (args.length > 1) args(1).toInt else 16
     val batches = if (args.length > 2) args(2).toInt else 8
     val perLine = 50L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val work = java.nio.file.Files.createTempDirectory("graft_sbench")
     val logDir = s"$work/log"

@@ -412,5 +412,9 @@ class IvfExtensionsSpec extends AnyFunSuite {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT graft_sorted_intersect_count(array('x'), array('y'))").head())
     assert(e.getMessage.contains("array<bigint>"), e.getMessage)
+    // the unchecked precondition is stated where SQL callers look
+    val usage = spark.catalog.getFunction("graft_sorted_intersect_count").description
+    assert(usage.contains("sorted ascending and element-distinct") &&
+      usage.contains("graft_intersect_count has no precondition"), usage)
   }
 }

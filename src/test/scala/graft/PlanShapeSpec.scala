@@ -14,6 +14,18 @@ class PlanShapeSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  test("plan locks run under Bench's session config: AQE floor, UTC, shuffle partitions") {
+    // GraftSession.settings(4) is what Bench's session carries on the
+    // 4-core benchmark box; a spec session that drifts from it would
+    // lock plans the bench never runs
+    val bench = GraftSession.settings(4).toMap
+    assert(bench("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "262144")
+    Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "spark.sql.session.timeZone", "spark.sql.shuffle.partitions").foreach { k =>
+      assert(spark.conf.get(k) == bench(k), k)
+    }
+  }
+
   test("t44 trigram backoff: all legs are LEFT equi-joins on gram keys; only nested-loop is the 1-row token total") {
     val p = plan("t44_trigram_backoff")
     assert(!p.contains("CartesianProduct"), s"cartesian in t44:\n$p")

@@ -13,8 +13,7 @@ import graft.functions.TextOps
   *    split config), so explode/trainer-heavy consumers opt into a
   *    keyed repartition. Locks: row identity with the plain reader at
   *    a fanned SF; the ≥256 KB floor keeps sf0.001 (and with it every
-  *    plan-lock spec) on the untouched plain scan; the off switch
-  *    works.
+  *    plan-lock spec) on the untouched plain scan.
   *
   * 2. The LR loop's long-scaled sums + shuffled-hash gradient join
   *    (TextAnalysis.logisticTrainLoop): frame-based apply/score

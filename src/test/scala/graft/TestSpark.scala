@@ -2,19 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (single SparkContext/JVM). */
+/** One shared local session for all suites (single SparkContext/JVM),
+  * built like every main's session, at the benchmark box's 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4)
 }
