@@ -3047,6 +3047,11 @@ object Queries {
     // rsd 0.0125 makes the 5% invariant a 4σ bound (P(miss) ~ 1e-4
     // across all six cells; the default 0.05 leaves 5% at 1σ — a ~1/3
     // flake rate per cell).
+    // Parity with the SQL holds while every l_returnflag group has a
+    // non-NULL key in both columns: a group whose l_partkey or
+    // l_orderkey is all NULL has no row in that leg, so the inner join
+    // drops it, where COUNT(DISTINCT) would emit 0. Vacuous on TPC-H
+    // lineitem, whose keys are NOT NULL.
     def leg(c: String, exactName: String, apName: String) =
       li.where(col(c).isNotNull).select(col("l_returnflag"), col(c)).distinct()
         .groupBy(col("l_returnflag"))
@@ -3202,8 +3207,10 @@ object Queries {
     // register-identical to running it over the raw rows — and the
     // exact COUNT(DISTINCT) materializes exactly those pairs anyway
     // (its partial-distinct shuffle). The null filter mirrors
-    // COUNT(DISTINCT)'s null exclusion (vacuous on lineitem, where
-    // l_partkey is non-null; stated for exact parity in general).
+    // COUNT(DISTINCT)'s null exclusion, with one difference: an
+    // l_returnflag group whose l_partkey is all NULL is dropped, where
+    // COUNT(DISTINCT) would emit n_parts = 0. Vacuous on TPC-H
+    // lineitem, whose keys are NOT NULL.
     li.where(col("l_partkey").isNotNull)
       .select("l_returnflag", "l_partkey").distinct()
       .groupBy(col("l_returnflag"))

@@ -56,25 +56,11 @@ object AlertSink {
     val sink = new AlertSink(m => messages.synchronized { messages += m })
   }
 
-  /** Full JSON string escaping: backslash, quote, and every control
-    * char — a tab in a free-form upstream symbol would otherwise make
-    * the payload invalid JSON and lose the alert with a 400. */
-  def jsonEscape(s: String): String = s.flatMap {
-    case '\\' => "\\\\"
-    case '"'  => "\\\""
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** HTTP POST to a Slack-compatible webhook: payload {"text": msg}.
     * One shared client with connect + request timeouts — delivery runs
     * on the streaming DRIVER inside foreachBatch, so an unresponsive
     * endpoint must fail the one alert, not wedge every micro-batch.
-    * Never exercised in the sandbox (zero egress) — the formatting/
-    * trigger logic is covered by the recording sink instead. */
+    * StreamEndToEndSpec drives it against a local HTTP server. */
   def webhook(url: String,
               timeout: java.time.Duration = java.time.Duration.ofSeconds(10)): AlertSink = {
     lazy val client = java.net.http.HttpClient.newBuilder()
@@ -88,7 +74,7 @@ object AlertSink {
           .timeout(timeout)
           .header("Content-Type", "application/json")
           .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-            "{\"text\":\"" + jsonEscape(msg) + "\"}"))
+            graft.Json.write(Map("text" -> msg))))
           .build()
         val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.discarding())
         if (resp.statusCode() >= 300)

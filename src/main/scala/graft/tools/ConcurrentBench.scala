@@ -1,5 +1,9 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 /** Concurrent-query posture probe — the multiplexed-deployment shape
   * Bench's sequential loop doesn't cover: N parallel query STREAMS
   * against ONE SparkSession with the FAIR scheduler, each stream its
@@ -67,7 +71,7 @@ object ConcurrentBench {
     // the errors array) no matter which phase a breakage lands in
     def runSafe(name: String, phase: String): Double =
       try runOne(name)
-      catch { case e: Throwable => errors.add(s"$name@$phase: $e"); -1.0 }
+      catch { case NonFatal(e) => errors.add(s"$name@$phase: $e"); -1.0 }
     def sweep(): Unit = spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 
@@ -89,12 +93,11 @@ object ConcurrentBench {
         val s = xs.sorted
         s(math.min(s.size - 1, math.ceil(p * s.size).toInt - 1))
       }
-    def r4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    val r4 = graft.Json.round4 _
 
     // one contention point: N streams, each the mix rotated by 5·i,
     // own FAIR pool, NO mid-run global unpersist (see scaladoc)
-    def runWidth(streams: Int): String = {
+    def runWidth(streams: Int): ListMap[String, Any] = {
       val perStream = Array.fill(streams)(Vector.empty[(String, Double)])
       val t0 = System.nanoTime()
       val threads = (0 until streams).map { i =>
@@ -103,7 +106,7 @@ object ConcurrentBench {
           val rotated = Mix.drop((i * 5) % Mix.size) ++ Mix.take((i * 5) % Mix.size)
           perStream(i) = rotated.map { n =>
             try n -> runOne(n)
-            catch { case e: Throwable => errors.add(s"$n@w${streams}s$i: $e"); n -> -1.0 }
+            catch { case NonFatal(e) => errors.add(s"$n@w${streams}s$i: $e"); n -> -1.0 }
           }.toVector
         }, s"conc-w$streams-s$i")
         th.start(); th
@@ -111,42 +114,32 @@ object ConcurrentBench {
       threads.foreach(_.join())
       val wall = (System.nanoTime() - t0) / 1e9
       sweep()
-      val streamJson = perStream.zipWithIndex.map { case (ts, i) =>
+      val streamStats = perStream.zipWithIndex.map { case (ts, i) =>
         val ok = ts.filter(_._2 >= 0)
         val worst = if (ok.nonEmpty) ok.maxBy(_._2) else ("none", -1.0)
-        s""""stream_$i":{"p50":${r4(pct(ok.map(_._2), 0.50))},""" +
-          s""""p95":${r4(pct(ok.map(_._2), 0.95))},""" +
-          s""""worst":"${worst._1}","worst_sec":${r4(worst._2)}}"""
-      }.mkString(",")
+        s"stream_$i" -> ListMap("p50" -> r4(pct(ok.map(_._2), 0.50)),
+          "p95" -> r4(pct(ok.map(_._2), 0.95)),
+          "worst" -> worst._1, "worst_sec" -> r4(worst._2))
+      }
       val eff = streams * seqTotal / wall
-      s"""{"streams":$streams,"wall_sec":${r4(wall)},""" +
-        s""""efficiency":${r4(eff)},$streamJson}"""
+      ListMap[String, Any]("streams" -> streams, "wall_sec" -> r4(wall),
+        "efficiency" -> r4(eff)) ++ streamStats
     }
 
     // the CONTENTION CURVE: one point per width is a posture, one
     // width is a point — widths run ascending so the heavier phases
     // inherit a maximally warm cache like a steady multiplexed box
-    val widthJsons = widths.map(runWidth)
+    val widthStats = widths.map(runWidth)
 
-    // full JSON escaping (the Verify/AlertSink helper): exception
-    // messages carry newlines and backslashes, and a broken run's
-    // artifact is the one a consumer most needs to parse
-    val errJson = {
-      val it = errors.iterator()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext)
-        b += "\"" + graft.streaming.AlertSink.jsonEscape(it.next()) + "\""
-      b.result().mkString("[", ",", "]")
-    }
     // seq_ok < mix_size marks the efficiency numbers as computed over
     // MISMATCHED workloads (seqTotal dropped a failed query's time
     // while wall still covers every stream attempting the full mix) —
     // a consumer must not read such a run as a contention cliff
     val seqOk = seqTimes.count(_ >= 0)
-    println(s"""{"metric":"concurrent_bench","sf":"$sfDir",""" +
-      s""""mix_size":${Mix.size},"seq_ok":$seqOk,"seq_total_sec":${r4(seqTotal)},""" +
-      s""""widths":${widthJsons.mkString("[", ",", "]")},""" +
-      s""""errors":$errJson}""")
+    println(graft.Json.write(ListMap("metric" -> "concurrent_bench",
+      "sf" -> sfDir, "mix_size" -> Mix.size, "seq_ok" -> seqOk,
+      "seq_total_sec" -> r4(seqTotal), "widths" -> widthStats,
+      "errors" -> errors.asScala.toSeq)))
     spark.stop()
   }
 }

@@ -13,7 +13,7 @@ object PlanDump {
     val (outDir, sfDir, names) = (args(0), args(1), args.drop(2).toSeq)
     val spark = graft.GraftSession()
     graft.Bench.prepareOrExit(spark, sfDir, "plandump")
-    val holder = graft.Bench.captureLastExecution(spark)
+    val holder = new graft.Bench.ExecutionCapture(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       // per-name failure tolerance: a crashing query (or one whose
@@ -23,7 +23,7 @@ object PlanDump {
         holder.clear()
         graft.SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        graft.Bench.drainBus(spark)
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         Option(holder.get()) match {
           case Some(qe) =>
             val norm = graft.Bench.normalizePlan(qe.executedPlan.toString)

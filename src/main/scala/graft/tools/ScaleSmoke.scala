@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
+import scala.collection.immutable.ListMap
 
 /** Scale validation: deterministic in-memory data ~50× the bench SF
   * (5M events / 50k docs / 50k embeddings), driving the heavy
@@ -54,15 +55,15 @@ object ScaleSmoke {
     // host, so cross-round probe comparisons adjudicate on bytes
     val wl = new graft.Bench.WorkListener
     spark.sparkContext.addSparkListener(wl)
-    val cap = graft.Bench.captureLastExecution(spark)
+    val cap = new graft.Bench.ExecutionCapture(spark)
     def time(name: String)(body: => DataFrame): (String, Double) = {
-      graft.Bench.drainBus(spark); wl.reset(); cap.clear()
+      org.apache.spark.GraftBus.drain(spark.sparkContext); wl.reset(); cap.clear()
       val t0 = System.nanoTime()
       // noop sink materializes all columns (count() would let Catalyst
       // prune unused window/projection expressions)
       body.write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.Bench.drainBus(spark)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       val rows = Option(cap.get())
         .map(qe => graft.Bench.firstOutputRows(qe.executedPlan))
         .getOrElse(-1L)
@@ -776,8 +777,9 @@ object ScaleSmoke {
       r7Linear ++ r7bResults ++ r7bLinear ++ r10Results ++ r10Linear ++
       annResults ++ r11Results ++ r11bResults ++ r12Results ++ r13Results ++
       r13bResults ++ r14Results ++ r16Results ++ r17Results
-    val qs = allResults.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_smoke","nEvents":$nEvents,"nDocs":$nDocs,"queries":$qs}""")
+    println(graft.Json.write(ListMap("metric" -> "scale_smoke",
+      "nEvents" -> nEvents, "nDocs" -> nDocs,
+      "queries" -> ListMap.from(allResults))))
     spark.stop()
   }
 }

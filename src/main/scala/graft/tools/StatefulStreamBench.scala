@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Throughput probe for the STATEFUL streaming paths that gate real
   * ingest — the numbers [[StreamBench]]'s minute pipeline doesn't
@@ -36,8 +36,25 @@ object StatefulStreamBench {
     val nEvents = if (args.length > 1) args(1).toLong else 2000000L
     val nFiles = if (args.length > 2) args(2).toInt else 16
     val batches = if (args.length > 3) args(3).toInt else 8
-    val spark = graft.GraftSession()
+    // batch stats come from recentProgress, which keeps only this many
+    // updates (default 100). Each stream reads max(1, lines/batches)
+    // lines per trigger, so it runs at most 2·batches data batches; the
+    // slack covers idle-trigger progress updates.
+    val spark = graft.GraftSession(conf = Seq(
+      "spark.sql.streaming.numRecentProgressUpdates" -> (2 * batches + 8).toString))
     import spark.implicits._
+
+    /** The engine's data batches and their median/max duration. Fails
+      * if recentProgress no longer holds batch 0, i.e. dropped some. */
+    def batchStats(q: StreamingQuery): String = {
+      val all = q.recentProgress
+      require(all.headOption.forall(_.batchId == 0),
+        s"recentProgress starts at batch ${all.head.batchId}: stats would be truncated")
+      val d = all.filter(_.numInputRows > 0)
+        .map(_.durationMs.get("triggerExecution").toLong).sorted
+      s"batches=${d.length} batch_ms_med=${d.lift(d.length / 2).getOrElse(0L)} " +
+        s"batch_ms_max=${d.lastOption.getOrElse(0L)}"
+    }
 
     val work = java.nio.file.Files.createTempDirectory("graft_stbench")
 
@@ -90,15 +107,10 @@ object StatefulStreamBench {
       .start()
     ndq.awaitTermination()
     val ndSec = (System.nanoTime() - t0) / 1e9
-    val ndBatches = ndq.recentProgress.filter(_.numInputRows > 0)
-    val ndDur = ndBatches.map(_.durationMs.get("triggerExecution").toLong).sorted
     val admitted = spark.read.parquet(ndOut).count()
     println(f"[statefulbench] neardup docs=$nDocs%d wall=$ndSec%.1fs " +
       f"rate=${nDocs / ndSec}%.0f docs/s admitted=$admitted%d " +
-      f"batches=${ndDur.length}%d " +
-      f"batch_ms_med=${if (ndDur.nonEmpty) ndDur(ndDur.length / 2) else 0L}%d " +
-      f"batch_ms_max=${if (ndDur.nonEmpty) ndDur.last else 0L}%d " +
-      f"state=rocksdb(bands=2,ttl=30m)")
+      s"${batchStats(ndq)} state=rocksdb(bands=2,ttl=30m)")
 
     // ---- 2. per-user funnel state machine over a generated event log --
     val evLog = s"$work/events"
@@ -143,15 +155,10 @@ object StatefulStreamBench {
       .start()
     fq.awaitTermination()
     val fSec = (System.nanoTime() - t1) / 1e9
-    val fBatches = fq.recentProgress.filter(_.numInputRows > 0)
-    val fDur = fBatches.map(_.durationMs.get("triggerExecution").toLong).sorted
     val advances = spark.read.parquet(fOut).count()
     println(f"[statefulbench] funnel events=$nEvents%d wall=$fSec%.1fs " +
       f"rate=${nEvents / fSec}%.0f events/s advances=$advances%d " +
-      f"batches=${fDur.length}%d " +
-      f"batch_ms_med=${if (fDur.nonEmpty) fDur(fDur.length / 2) else 0L}%d " +
-      f"batch_ms_max=${if (fDur.nonEmpty) fDur.last else 0L}%d " +
-      f"state=value-per-user(3 stages)")
+      s"${batchStats(fq)} state=value-per-user(3 stages)")
 
     // ---- 3. trained-gate corpus admission (r19, VERDICT item 7): the
     // CorpusStream.startTrained path — watermarked dedup + the trained
@@ -188,15 +195,10 @@ object StatefulStreamBench {
       s"$work/c_ckpt", model, trigger = Trigger.AvailableNow())
     cq.awaitTermination()
     val cSec = (System.nanoTime() - t2) / 1e9
-    val cBatches = cq.recentProgress.filter(_.numInputRows > 0)
-    val cDur = cBatches.map(_.durationMs.get("triggerExecution").toLong).sorted
     val cAdmitted = spark.read.parquet(cOut).count()
     println(f"[statefulbench] corpus-trained docs=$nDocs%d wall=$cSec%.1fs " +
       f"rate=${nDocs / cSec}%.0f docs/s admitted=$cAdmitted%d " +
-      f"batches=${cDur.length}%d " +
-      f"batch_ms_med=${if (cDur.nonEmpty) cDur(cDur.length / 2) else 0L}%d " +
-      f"batch_ms_max=${if (cDur.nonEmpty) cDur.last else 0L}%d " +
-      f"state=dedup-map(watermark 10m), gate=trained-512b")
+      s"${batchStats(cq)} state=dedup-map(watermark 10m), gate=trained-512b")
     spark.stop()
   }
 }

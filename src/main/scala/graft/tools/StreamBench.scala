@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import scala.util.control.NonFatal
 
 /** Streaming throughput probe: the full reference pipeline (graftlog
   * source → JSON envelope parse → watermarked dedup → 1-minute OHLCV
@@ -85,9 +86,15 @@ object StreamBench {
     val sec = (System.nanoTime() - t0) / 1e9
 
     // windows inside the final watermark horizon stay in state by
-    // design; report what flushed (0 means the watermark never moved)
+    // design; report what flushed. An unreadable sink is a failed run,
+    // not "0 flushed".
     def countOf(p: String): Long =
-      try spark.read.parquet(p).count() catch { case _: Throwable => 0L }
+      try spark.read.parquet(p).count()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[streambench] reading sink $p failed: $e")
+        spark.stop()
+        sys.exit(1)
+      }
     val bars = countOf(s"$outDir/bars")
     val metrics = countOf(s"$outDir/metrics")
     println(f"[streambench] trades=$nTrades%d files=$nFiles%d " +

@@ -271,7 +271,28 @@ class StreamEndToEndSpec extends AnyFunSuite {
   }
 
   test("webhook payload escaping covers quotes, backslashes, and control chars") {
-    assert(AlertSink.jsonEscape(("a\tb\"c\\d\ne" + 1.toChar)) ==
-      "a\\tb\\\"c\\\\d\\ne\\u0001")
+    // the symbol lands verbatim in the message text; a local server
+    // receives the POST, whose body must parse back to {"text": msg}
+    val nasty = "a\tb\"c\\d\ne" + 1.toChar
+    val flagged = Seq((nasty, java.sql.Timestamp.valueOf("2025-01-01 10:00:00"),
+      10.0, 9.0, 0.1)).toDF("symbol", "timestamp", "close", "vwap_5", "vol_5")
+    val bodies = new java.util.concurrent.LinkedBlockingQueue[String]
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", ex => {
+      bodies.add(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+      ex.sendResponseHeaders(204, -1)
+      ex.close()
+    })
+    server.start()
+    try {
+      val msg = AlertSink.webhook(s"http://127.0.0.1:${server.getAddress.getPort}/")
+        .deliver(flagged).get
+      assert(msg.contains(nasty))
+      val body = bodies.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+      assert(body != null, "webhook POST never arrived")
+      assert(Json.mapper.readValue(body, classOf[Map[String, String]]) ==
+        Map("text" -> msg), body)
+    } finally server.stop(0)
   }
 }

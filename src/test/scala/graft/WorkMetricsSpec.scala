@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,10 +18,10 @@ class WorkMetricsSpec extends AnyFunSuite {
     * completed execution's AQE-final plan — the Bench rep-1 path,
     * through the SAME shared capture helper Bench/PlanDump use. */
   private def capture(df: DataFrame): (Long, String) = {
-    val holder = Bench.captureLastExecution(spark)
+    val holder = new Bench.ExecutionCapture(spark)
     try {
       df.write.format("noop").mode("overwrite").save()
-      Bench.drainBus(spark)
+      GraftBus.drain(spark.sparkContext)
       val p = holder.get().executedPlan
       (Bench.firstOutputRows(p), Bench.planFingerprint(p.toString))
     } finally holder.unregister() // shared session — never leak listeners
@@ -83,18 +84,18 @@ class WorkMetricsSpec extends AnyFunSuite {
     val wl = new Bench.WorkListener
     spark.sparkContext.addSparkListener(wl)
     try {
-      Bench.drainBus(spark); wl.reset()
+      GraftBus.drain(spark.sparkContext); wl.reset()
       spark.range(100000).repartition(4)
         .groupBy(expr("id % 5").as("k")).count()
         .write.format("noop").mode("overwrite").save()
-      Bench.drainBus(spark)
+      GraftBus.drain(spark.sparkContext)
       val w = wl.snapshot(rows = 5L, fp = "feedface00000000")
       assert(w.tasks > 0, "tasks must be counted")
       assert(w.sw > 0 && w.sr > 0,
         s"a repartition+agg must read and write shuffle bytes: $w")
       assert(w.peak > 0, s"peak execution memory must be observed: $w")
       // reset clears the window: a snapshot with no jobs in between is 0
-      Bench.drainBus(spark); wl.reset()
+      GraftBus.drain(spark.sparkContext); wl.reset()
       val empty = wl.snapshot(rows = -1L, fp = "")
       assert(empty.tasks == 0 && empty.sr == 0 && empty.sw == 0, empty.toString)
     } finally spark.sparkContext.removeSparkListener(wl)
