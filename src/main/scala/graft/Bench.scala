@@ -131,8 +131,8 @@ object Bench {
   /** Register a listener capturing the LAST completed SQL execution
     * (FIFO bus: after a [[org.apache.spark.GraftBus.drain]] the holder
     * is the most recent action's QueryExecution — the rep's noop write
-    * in the bench loop). Shared by Bench, PlanDump, ScaleSmoke and
-    * WorkMetricsSpec so the capture protocol cannot drift. */
+    * in the bench loop). Shared by Bench, PlanDump and WorkMetricsSpec
+    * so the capture protocol cannot drift. */
   private[graft] final class ExecutionCapture(spark: SparkSession) {
     private val ref =
       new java.util.concurrent.atomic.AtomicReference[QueryExecution]
@@ -364,6 +364,13 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // median-of-N per query: single-run numbers on this box swing by
+    // seconds run-to-run (GC, page cache, task-schedule jitter), which
+    // made real 2x regressions indistinguishable from noise in r1/r2.
+    // The median of 3 independent runs is stable enough to defend a
+    // regression bar while only tripling the bench wall-clock. Both
+    // numeric knobs are checked before any session or warm-up work.
+    val reps = GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPS", 3)
     val cpus = GraftSession.cores
     val spark = GraftSession()
     // warmup: touch every table (footer + listing), run one tiny job
@@ -373,12 +380,6 @@ object Bench {
         System.err.println(s"[bench] warmup of $t failed: $e") }
     }
     prepareOrExit(spark, sfDir, "bench")
-    // median-of-N per query: single-run numbers on this box swing by
-    // seconds run-to-run (GC, page cache, task-schedule jitter), which
-    // made real 2x regressions indistinguishable from noise in r1/r2.
-    // The median of 3 independent runs is stable enough to defend a
-    // regression bar while only tripling the bench wall-clock.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // Fixed-cost calibration probe: pure-CPU hash aggregate over an
     // in-memory range — no I/O, no SF dependence, same noop-sink
     // methodology as the queries. Timed BEFORE, MIDWAY, and AFTER the
@@ -467,7 +468,12 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       // drop the finished run's localCheckpoint blocks: runs and
       // queries are independent, and letting ~dozens of materialized
-      // RDDs accumulate makes later work pay earlier memory pressure
+      // RDDs accumulate makes later work pay earlier memory pressure.
+      // This GLOBAL sweep is safe only because Bench runs one query at
+      // a time: a concurrent caller's in-flight localCheckpoint blocks
+      // would die with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the round-16
+      // concurrent-serving probe, TESTDATA.md), so such a caller must
+      // scope cleanup to its own frames or sweep at a quiesced point.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       if (ok) Some(dt) else None

@@ -7,8 +7,19 @@ import org.apache.spark.sql.SparkSession
   * [[apply]], so the plans the specs lock, the results Verify dumps
   * and the timings Bench measures all come from the same settings. */
 object GraftSession {
-  /** Local task threads: `SPARK_GRAFT_CPUS`, default 4. */
-  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+  /** Local task threads: `SPARK_GRAFT_CPUS`, default 4. Lazy, so a bad
+    * value fails at first use with [[positiveInt]]'s message rather than
+    * as an ExceptionInInitializerError. */
+  lazy val cores: Int = positiveInt("SPARK_GRAFT_CPUS", 4)
+
+  /** The rule for numeric env knobs: unset gives `default`; anything but
+    * an integer >= 1 fails with a message naming the knob. */
+  def positiveInt(name: String, default: Int,
+                  env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default) { v =>
+      v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$name must be an integer >= 1, got '$v'"))
+    }
 
   /** AQE's coalescing floor (OPTIMIZATION_r18.md Finding 3). The default
     * 1 MB minPartitionSize assumes bytes ≈ work; the text/vector

@@ -5,10 +5,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** The one JSON writer. Every record the program emits (the bench record
   * and its stdout summary, Verify's oracle_sql.json, the alert webhook
-  * body, the tool records) renders through [[mapper]], so escaping and
-  * number formatting are decided here and nowhere else. Case classes
-  * render their fields in declaration order; Scala maps in iteration
-  * order. */
+  * body) renders through [[mapper]], so escaping and number formatting
+  * are decided here and nowhere else. Case classes render their fields
+  * in declaration order; Scala maps in iteration order. */
 object Json {
   val mapper: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
 

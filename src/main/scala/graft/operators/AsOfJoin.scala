@@ -76,9 +76,10 @@ object AsOfJoin {
     * of facts against KB-MB of reference rows this is the plan you
     * want; [[asOf]]/[[asOfNative]] shuffle both sides and remain the
     * general path when the right side is unbounded. (On local[32] the
-    * two are at parity — ScaleSmoke `asof_bounded_*` — because an
-    * in-process shuffle costs almost nothing; the broadcast form's
-    * advantage is on real clusters, where a fact-side shuffle is
+    * two measured at parity — the retired `asof_bounded_*` probe,
+    * `git show c0bf020:src/main/scala/graft/tools/ScaleSmoke.scala` —
+    * because an in-process shuffle costs almost nothing; the broadcast
+    * form's advantage is on real clusters, where a fact-side shuffle is
     * network + disk.)
     *
     * Same semantics as the other forms (left-outer, inclusive

@@ -958,7 +958,7 @@ object Dedup {
     * persisted corpus key tables (`name`, from [[saveNearDupKeys]]) —
     * ONE batch text scan feeds both generators via a shared
     * checkpointed [[nearDupKeys]] frame. Defined once so the
-    * registered d16 query and the ScaleSmoke probe cannot drift
+    * registered d16 query and [[appendClusterAssignments]] cannot drift
     * (the writeIncrementalKeys single-definition discipline).
     * Output: (doc_a = batch doc, doc_b = the other side). */
   def incrementalDeltaPairs(spark: org.apache.spark.sql.SparkSession,

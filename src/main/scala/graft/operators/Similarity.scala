@@ -1059,8 +1059,8 @@ object Similarity {
 
   /** Long-form PQ codes pivoted wide: one row per corpus vector,
     * columns (neighbor_id, c0..c{m-1}) — the layout every ADC consumer
-    * scores against. ONE definition (pqRerankTopK, ensureAdcPostings,
-    * ScaleSmoke) so the column naming and pivot-value types cannot
+    * scores against. ONE definition (adcPostings, pqRerankTopK,
+    * retrainPqBooks) so the column naming and pivot-value types cannot
     * drift between them. */
   def codesWide(codes: DataFrame, m: Int): DataFrame =
     codes.groupBy("vec_id")

@@ -470,8 +470,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // root set — never hash-exchanged on cluster_id. A shuffle of the
     // assignment table here would put the full cluster table back into
     // the per-ingest shuffle path, the O(cluster table) shape the
-    // restriction removed (ScaleSmoke probes the cost; this pins the
-    // mechanism).
+    // restriction removed (TESTDATA.md round 11 records the flat cost;
+    // this pins the mechanism).
     // (the twin SEMI join runs inside the checkpointed CC branch, so
     // only the pass-through ANTI join is visible in the final plan)
     val p = plan("d16_incremental_clusters")

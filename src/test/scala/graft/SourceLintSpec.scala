@@ -1,0 +1,66 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level invariants that no behavioural spec can see, read
+  * straight from `src/main` and `src/test`:
+  *
+  *   - the session is configured in one place: the SparkSession builder
+  *     is called only from GraftSession.scala;
+  *   - no catch clause in `src/main` catches Throwable (failures on a
+  *     timing or result path are `NonFatal`, so fatal errors stay loud);
+  *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
+  *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
+  *     A/B justifies it, so adding one means editing that list on
+  *     purpose.
+  */
+class SourceLintSpec extends AnyFunSuite {
+  private val Knobs = Set(
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_MASTER",
+    "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_SKIP",
+    "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_OUT",
+    "spark.graft.q70.broadcastFrontierLimit")
+
+  /** Every .scala file under `root` with its text; never empty, so a
+    * wrong working directory cannot pass a lint vacuously. */
+  private def sources(root: String): Seq[(Path, String)] = {
+    val walk = Files.walk(Paths.get(root))
+    val found =
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => p -> Files.readString(p))
+      finally walk.close()
+    assert(found.nonEmpty, s"no Scala sources under $root")
+    found
+  }
+  private lazy val main = sources("src/main")
+  private lazy val test = sources("src/test")
+
+  test("only GraftSession builds a SparkSession") {
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val callers = (main ++ test).collect {
+      case (p, src) if builder.findFirstIn(src).isDefined => p.getFileName.toString
+    }
+    assert(callers == Seq("GraftSession.scala"))
+  }
+
+  test("no catch clause in src/main catches Throwable") {
+    // a typed `case e: Throwable` anywhere, or an untyped first case
+    // right after `catch {`, which matches every Throwable too
+    val typed = """case\s+\w+\s*:\s*(java\.lang\.)?Throwable\b""".r
+    val untyped = """catch\s*\{\s*case\s+\w+\s*=>""".r
+    val hits = main.flatMap { case (p, src) =>
+      (typed.findAllIn(src) ++ untyped.findAllIn(src)).map(m => s"${p.getFileName}: $m")
+    }
+    assert(hits.isEmpty)
+  }
+
+  test("the knob literals in src/main are exactly the recorded knobs") {
+    val literal = """"(SPARK_GRAFT_\w*|spark\.graft\.[\w.]*)""".r
+    val found = main.flatMap { case (_, src) =>
+      literal.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(found == Knobs)
+  }
+}

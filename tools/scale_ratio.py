@@ -1,10 +1,13 @@
 #!/usr/bin/env python3
 """Full-surface replica ratio gate: SCALE_r{N}.json builder.
 
-Takes two BENCH_LAST.json artifacts — the sf0.1 baseline and the
-token-salted 10x replica run (tools/MakeScale) — and emits one JSON
-file with per-query {base_sec, repl_sec, ratio}, the skip list (with
-the documented reason), and a worst-ratio summary. Sub-second
+Takes two BENCH_LAST.json artifacts — the sf0.1 baseline and a 10x
+replica run — and emits one JSON file with per-query {base_sec,
+repl_sec, ratio}, the skip list (with the documented reason), and a
+worst-ratio summary. The records do not say which generator built the
+replica or whether it copied document text verbatim; if it did,
+near-dup pair queries grow with copies^2 and their ratios measure the
+fixture, so note the generator beside the SCALE file. Sub-second
 baselines are ratio-unstable (fixed per-query overhead dominates), so
 queries with base < `--floor` (default 0.15 s) are reported but kept
 out of the worst-ratio ranking.
@@ -84,12 +87,12 @@ def main():
         "skip_rule": REPLICA_SKIP,
         "skip_rule_drift": rule_drift,
         "skip_reason": ("cloned-EMBEDDING pair queries grow with copies^2 "
-                        "(vectors cannot be token-salted like documents) "
                         "plus the q68 densified output grid — the documented "
-                        "d05-family replica rule, narrowed to its remaining "
-                        "members now that MakeScale salts document text; "
-                        "d06 codified into the set in r18 (its r17 x31.6 "
-                        "was pair growth x100, time sublinear in pairs)"),
+                        "d05-family replica rule; d06 codified into the set "
+                        "in r18 (its r17 x31.6 was pair growth x100, time "
+                        "sublinear in pairs). Document-pair queries stay "
+                        "rated: they show the same copies^2 growth when the "
+                        "replica copies document text verbatim"),
         "failed": sorted(set(base.get("failed", []) + repl.get("failed", []))),
         "queries": rows,
     }
