@@ -12,9 +12,11 @@ import scala.util.control.NonFatal
 /** Driver-run benchmark: times every registered query at the given SF,
   * writes one JSON [[Record]] of the run (BENCH_LAST.json and/or
   * SPARK_GRAFT_BENCH_OUT) and prints its [[Summary]] as the final
-  * stdout line. A small warmup (table footers + a trivial
-  * job) runs first so JVM/codegen/file-listing startup cost doesn't
-  * land on whichever query happens to run first.
+  * stdout line. A small warmup (every table resolved into the
+  * `Tables` catalog + a trivial job each) runs first so JVM/codegen/
+  * table-resolution startup cost doesn't land on whichever query
+  * happens to run first. Every timed rep runs in a job group named
+  * after its query ([[withJobGroup]]).
   *
   * NOISE-EVIDENT by construction (the r14 adjudication: a co-loaded
   * driver box read 129 s where five same-HEAD isolated runs read
@@ -362,6 +364,16 @@ object Bench {
     md.digest(normalizePlan(planStr).getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString
   }
+  /** Runs `body` with every Spark job it starts in job group `name`
+    * (description "`name` rep `rep`"), so listener events and event logs
+    * carry the query that caused them. The group is cleared afterwards,
+    * also when `body` throws. */
+  def withJobGroup[T](sc: org.apache.spark.SparkContext, name: String, rep: Int)(
+      body: => T): T = {
+    sc.setJobGroup(name, s"$name rep $rep", interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // median-of-N per query: single-run numbers on this box swing by
@@ -373,7 +385,9 @@ object Bench {
     val reps = GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPS", 3)
     val cpus = GraftSession.cores
     val spark = GraftSession()
-    // warmup: touch every table (footer + listing), run one tiny job
+    // warmup: resolve every table into the session's `Tables` catalog
+    // (listing + schema job, paid once here rather than in a timed
+    // query) and run one tiny job per table
     graft.sources.Tables.all.foreach { t =>
       try graft.sources.Tables(spark, sfDir, t).limit(1).count()
       catch { case NonFatal(e) =>
@@ -453,18 +467,19 @@ object Bench {
     val workListener = new WorkListener
     spark.sparkContext.addSparkListener(workListener)
     val lastQe = new ExecutionCapture(spark)
-    def timeOnce(name: String,
+    def timeOnce(name: String, rep: Int,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       // noop sink: materializes EVERY output column. A bare count()
       // would let Catalyst prune unused projections (e.g. window
       // columns), timing a plan that never computes the metric.
-      val ok =
+      val ok = withJobGroup(spark.sparkContext, name, rep) {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: $e")
           false
         }
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop the finished run's localCheckpoint blocks: runs and
       // queries are independent, and letting ~dozens of materialized
@@ -491,7 +506,7 @@ object Bench {
         if (r == 1) {
           GraftBus.drain(spark.sparkContext); workListener.reset(); lastQe.clear()
         }
-        val t = timeOnce(name, fn)
+        val t = timeOnce(name, r, fn)
         if (r == 1 && t.isDefined) {
           GraftBus.drain(spark.sparkContext)
           val (rows, fp) = Option(lastQe.get()) match {
@@ -521,7 +536,7 @@ object Bench {
         // that trips the 3x rule must not record a normal timing.
         if (prior.get(name).exists(p => p > 0.05 && median(times) > 3 * p)) {
           reran += name
-          timeOnce(name, fn) match {
+          timeOnce(name, reps + 1, fn) match {
             case Some(extra) =>
               val all = times :+ extra
               spread += name -> all.sorted

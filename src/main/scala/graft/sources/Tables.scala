@@ -1,12 +1,43 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Readers for the driver's Parquet star schema (TESTDATA.md).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
+
+/** Readers for the driver's Parquet star schema (TESTDATA.md), behind a
+  * per-session table catalog.
   *
-  * Plain `spark.read.parquet` — schema comes from the parquet footer, so no
-  * inference scan. All downstream operators stay declarative, which lets
-  * Catalyst push filters and prune columns into the scan (verify with
+  * Resolving a parquet path (`spark.read.parquet`) lists it and runs one
+  * Spark schema-inference job, whose task reads the footer. The
+  * catalog pays that once per (session, path): it keeps the resolved
+  * `BaseRelation` (schema plus file listing, no data) and every later
+  * call wraps it in a fresh `LogicalRelation` via
+  * `spark.baseRelationToDataFrame`. A fresh relation means fresh
+  * attribute ids, so two calls for the same table can be joined to each
+  * other with DataFrame column references (q10, the pair joins).
+  *
+  *  - Invalidation: an entry is keyed on the (path, length, mtime) of the
+  *    table's leaf files. A single-file table costs one `stat` per call;
+  *    a directory table (a MakeScale replica) is listed, because
+  *    rewriting a part file in place leaves the directory's own mtime
+  *    alone. A missing path fails with the file system's
+  *    FileNotFoundException.
+  *  - Session scope: a `HadoopFsRelation` holds its `SparkSession`, so
+  *    entries are keyed by session identity and never served to another
+  *    session (a `spark.newSession()` child resolves its own). Every
+  *    entry of a SparkContext is dropped when it stops, so the catalog
+  *    keeps no stopped session alive; a child session dropped while its
+  *    context runs keeps its few entries until then.
+  *  - Session confs that shape schema conversion are read at the first
+  *    resolve; `nanosAsLong` is set on every call (see [[resolve]]).
+  *
+  * All downstream operators stay declarative, which lets Catalyst push
+  * filters and prune columns into the scan (verify with
   * `.explain("formatted")` → `PushedFilters` / `ReadSchema`). At cluster
   * scale the same readers work unchanged: partition pruning and split
   * planning are handled by the parquet source.
@@ -30,29 +61,91 @@ object Tables {
     "events" -> "event_id", "documents" -> "doc_id",
     "embeddings" -> "vec_id")
 
-  /** Footer summary of a single parquet file: (rowGroups, bytes,
-    * rows). Cached on (path, length, mtime) — a driver-side footer
-    * read costs ~1 ms and each bench rep re-opens the table. */
+  /** Footer summary of a table's files: (rowGroups, bytes, rows). */
   private final case class FileMeta(rowGroups: Int, bytes: Long, rows: Long)
 
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FileMeta]
+  /** One resolved table: its leaf files as of resolution and the
+    * relation over them. */
+  private final class Entry(fs: FileSystem, leaves: Seq[FileStatus],
+                            val relation: BaseRelation) {
+    val fingerprint: Seq[(String, Long, Long)] = fingerprintOf(leaves)
 
-  private def fileMetaOf(spark: SparkSession, path: String): FileMeta = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(p)
-    footerCache.computeIfAbsent((path, st.getLen, st.getModificationTime),
-      { _ =>
+    /** Footer summary for [[fanOut]], read on first use (~1 ms a file). */
+    lazy val meta: FileMeta = {
+      import scala.jdk.CollectionConverters._
+      val blocks = leaves.flatMap { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, fs.getConf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          import scala.jdk.CollectionConverters._
-          val blocks = r.getFooter.getBlocks.asScala.toSeq
-          FileMeta(blocks.size, st.getLen, blocks.map(_.getRowCount).sum)
-        } finally r.close()
-      })
+        try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+      }
+      FileMeta(blocks.size, leaves.map(_.getLen).sum,
+        blocks.map(_.getRowCount).sum)
+    }
+  }
+
+  private def fingerprintOf(leaves: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    leaves.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+
+  /** The files Spark would scan under `p`: `p` itself, or every
+    * non-hidden file below it (`_SUCCESS`, `.crc` and the like skipped). */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    val st = fs.getFileStatus(p)
+    if (st.isFile) Seq(st)
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[FileStatus]
+      while (it.hasNext) {
+        val f = it.next()
+        val n = f.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith(".")) out += f
+      }
+      out.result().sortBy(_.getPath.toString)
+    }
+  }
+
+  private val catalog = new ConcurrentHashMap[(SparkSession, String), Entry]
+  private val watched = ConcurrentHashMap.newKeySet[SparkContext]()
+
+  /** Drops every entry of `sc`'s sessions when `sc` stops. */
+  private def watch(sc: SparkContext): Unit =
+    if (watched.add(sc)) sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+        catalog.keySet.removeIf(_._1.sparkContext eq sc)
+        watched.remove(sc)
+      }
+    })
+
+  /** The catalog entry for `dir/name.parquet` in `spark`, resolved
+    * again when the table's files changed since the last call. */
+  private def resolve(spark: SparkSession, dir: String, name: String): Entry = {
+    // Legacy testdata generations carried events.ts as TIMESTAMP(NANOS),
+    // which Spark rejects at schema conversion unless this conf is set
+    // (it reads as epoch-nanos LongType instead). Harmless on the
+    // current TIMESTAMP(MICROS) layout; kept so the nanos fixture and
+    // any old replica stay readable. Set on every call (idempotent
+    // session conf) rather than inside the events reader only —
+    // otherwise whether a generic read of `events` works depends on
+    // whether Tables.events happened to run first in the session.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val leaves = leafFiles(fs, p)
+    val key = (spark, path)
+    val cached = catalog.get(key)
+    if (cached != null && cached.fingerprint == fingerprintOf(leaves)) cached
+    else {
+      val relation = spark.read.parquet(path).queryExecution.analyzed match {
+        case l: LogicalRelation => l.relation
+        case other => throw new IllegalStateException(
+          s"$path resolved to ${other.nodeName}, not a LogicalRelation")
+      }
+      val e = new Entry(fs, leaves, relation)
+      watch(spark.sparkContext)
+      catalog.put(key, e)
+      e
+    }
   }
 
   /** Scale-adaptive SCAN FAN-OUT (optimization guide §2.5 input skew,
@@ -63,9 +156,10 @@ object Tables {
     * lineitem: 600k rows, 1 row group), which serialized every
     * downstream tokenize/aggregate onto one core of a 32-core box.
     *
-    * When the file's row groups cannot feed half the cores AND the
-    * file is big enough for downstream work to matter (≥ 256 KB —
-    * sf0.001, unit fixtures and the plan-lock specs stay untouched),
+    * When the table's row groups (summed over its files) cannot feed
+    * half the cores AND the table is big enough for downstream work to
+    * matter (≥ 256 KB — sf0.001, unit fixtures and the plan-lock specs
+    * stay untouched),
     * hash-repartition on the table's natural key to
     * K = min(defaultParallelism, rows/150). Design notes:
     *
@@ -90,13 +184,13 @@ object Tables {
     *    are unique-ish (≥ 150k orderkeys, 5k doc_ids against ≤ 32-way
     *    fan-out), so hash balance holds (guide §2.5). */
   private def fanOut(spark: SparkSession, df: DataFrame, name: String,
-                     path: String): DataFrame = {
+                     entry: Entry): DataFrame = {
     val keyOpt = fanOutKey.get(name)
     if (keyOpt.isEmpty) return df
     val key = keyOpt.get
     val par = spark.sparkContext.defaultParallelism
     val meta =
-      try fileMetaOf(spark, path)
+      try entry.meta
       // unreadable footer: plain scan. NonFatal only — swallowing OOM/
       // LinkageError here would mask a real failure as a perf change.
       catch { case scala.util.control.NonFatal(_) => return df }
@@ -107,18 +201,8 @@ object Tables {
     else df.repartition(k, org.apache.spark.sql.functions.col(key))
   }
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Legacy testdata generations carried events.ts as TIMESTAMP(NANOS),
-    // which Spark rejects at schema conversion unless this conf is set
-    // (it reads as epoch-nanos LongType instead). Harmless on the
-    // current TIMESTAMP(MICROS) layout; kept so the nanos fixture and
-    // any old replica stay readable. Set on every read (idempotent
-    // session conf) rather than inside the events reader only —
-    // otherwise whether a generic read of `events` works depends on
-    // whether Tables.events happened to run first in the session.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.baseRelationToDataFrame(resolve(spark, dir, name).relation)
 
   /** [[apply]] + [[fanOut]]: the OPT-IN fan-out reader. Deliberately a
     * separate entry instead of a blanket rule inside [[apply]] — a
@@ -129,8 +213,8 @@ object Tables {
     * reduce-immediately consumers (sketch aggregates, small word-table
     * pipelines), so each call site chooses. */
   def fanned(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    fanOut(spark, apply(spark, dir, name), name, path)
+    val entry = resolve(spark, dir, name)
+    fanOut(spark, spark.baseRelationToDataFrame(entry.relation), name, entry)
   }
 
   def documentsFanned(s: SparkSession, d: String): DataFrame =

@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     is called only from GraftSession.scala;
   *   - no catch clause in `src/main` catches Throwable (failures on a
   *     timing or result path are `NonFatal`, so fatal errors stay loud);
+  *   - star-schema tables are read through `graft.sources.Tables`, so
+  *     the per-session catalog cannot be skipped quietly (each bypass
+  *     brings back a schema-inference job per call);
   *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
   *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
   *     A/B justifies it, so adding one means editing that list on
@@ -54,6 +57,23 @@ class SourceLintSpec extends AnyFunSuite {
       (typed.findAllIn(src) ++ untyped.findAllIn(src)).map(m => s"${p.getFileName}: $m")
     }
     assert(hits.isEmpty)
+  }
+
+  test("star-schema tables are read only through Tables") {
+    // `read.parquet(s"$dir/<table>.parquet")`, with the table named
+    // literally or by a variable. Tables.scala is the catalog itself;
+    // MakeScale copies the source tables file for file.
+    val exempt = Set("Tables.scala", "MakeScale.scala")
+    val bypass =
+      """read\s*\.\s*parquet\s*\(\s*s"\$\{?\w+\}?/(\$\{?\w+\}?|\w+)\.parquet"""".r
+    val hits = main.collect {
+      case (p, src) if !exempt(p.getFileName.toString) =>
+        bypass.findAllIn(src).map(m => s"${p.getFileName}: $m")
+    }.flatten
+    assert(hits.isEmpty)
+    // the scan covers the query surface and the operators
+    assert(main.exists(_._1.endsWith(Paths.get("graft", "Queries.scala"))))
+    assert(main.exists(_._1.toString.contains("/operators/")))
   }
 
   test("the knob literals in src/main are exactly the recorded knobs") {
