@@ -19,7 +19,7 @@ import graft.sources.Connectors
   * same outputs.
   *
   * Scale: the window aggregation state is bounded by (keys × watermark
-  * horizon); foreachBatch writes partitioned parquet append-only.
+  * horizon); foreachBatch overwrites one partition per batch id.
   */
 object MinuteStream {
   /** S2→P1→P2→G1→P4/P5: JSON envelope column `value` → flat trades
@@ -66,37 +66,41 @@ object MinuteStream {
   }
 
   /** One micro-batch's sink work, EXACTLY-ONCE effective: bars and
-    * metrics land in `batch_id=<id>/symbol=<s>` partitions via dynamic
-    * partition overwrite, so the at-least-once replay foreachBatch
-    * permits (crash after the parquet write, before the checkpoint
-    * commit — the dup risk the reference acknowledges,
-    * stock_stream.py:118) overwrites the SAME partitions instead of
-    * appending duplicate rows. Readers still see `outDir/bars` as one
-    * table; batch_id is a physical layout column only. Public so the
-    * replay contract is directly testable (call twice with one id).
-    * Long-running streams: pair with [[SinkMaintenance.compact]] (wired
-    * into [[start]] via `compactEvery`) so partition count stays
-    * bounded; [[SinkMaintenance.read]] is the crash-consistent view. */
+    * metrics each land as one (symbol, timestamp)-sorted file in
+    * `batch_id=<id>` via dynamic partition overwrite, so the
+    * at-least-once replay foreachBatch permits (crash after the write,
+    * before the checkpoint commit, stock_stream.py:118) overwrites the
+    * SAME partition instead of appending duplicates. The sort is the
+    * analogue of the reference's symbol index: symbol reads prune row
+    * groups by min/max. `count()` computes the persisted batch in
+    * parallel before `coalesce(1)` would pull the stateful stages into
+    * one task; an empty batch (and its replay) writes nothing. Public so
+    * replay is testable (call twice with one id). Bound the partition
+    * count with [[SinkMaintenance.compact]] (`compactEvery` in [[start]])
+    * and read through [[SinkMaintenance.read]]. */
   def writeBatch(batch: DataFrame, batchId: Long, outDir: String,
                  threshold: Double = Metrics.AnomalyThreshold,
                  onAlert: DataFrame => Unit = _ => ()): Unit = {
+    def write(df: DataFrame, table: String): Unit = Connectors.overwritePartitions(
+      df.coalesce(1).sortWithinPartitions("symbol", "timestamp")
+        .withColumn("batch_id", lit(batchId)), s"$outDir/$table", Seq("batch_id"))
     batch.persist()
     try {
-      Connectors.overwritePartitions(batch.withColumn("batch_id", lit(batchId)),
-        s"$outDir/bars", Seq("batch_id", "symbol"))
-      val metrics = metricsOnBars(batch, threshold)
-      Connectors.overwritePartitions(metrics.withColumn("batch_id", lit(batchId)),
-        s"$outDir/metrics", Seq("batch_id", "symbol"))
-      onAlert(metrics.filter(col("is_anomaly")))
+      if (batch.count() > 0) {
+        write(batch, "bars")
+        val metrics = metricsOnBars(batch, threshold)
+        write(metrics, "metrics")
+        onAlert(metrics.filter(col("is_anomaly")))
+      }
     } finally { batch.unpersist(); () }
   }
 
   /** T1/T2/T7 + S6: 1-minute micro-batches, checkpointed, foreachBatch
     * sink writing bars + metrics parquet (idempotent batch_id-keyed
-    * partitions, symbol subpartition for sink-side pruning — see
-    * [[writeBatch]]). Alert rows = metrics filtered on the flag —
-    * pass `onAlert = AlertSink.webhook(url).onAlert` for reference-S9
-    * Slack delivery (formatting + bounded collect live in [[AlertSink]]).
+    * partitions, one symbol-sorted file each — see [[writeBatch]]).
+    * Alert rows = metrics filtered on the flag — pass
+    * `onAlert = AlertSink.webhook(url).onAlert` for reference-S9 Slack
+    * delivery (formatting + bounded collect live in [[AlertSink]]).
     * NOTE: the parity default `threshold` = 3.0 is
     * mathematically unreachable with a 5-bar frame
     * ((max−min)/stddev_samp ≤ √8 ≈ 2.83, see Metrics.AnomalyThreshold)

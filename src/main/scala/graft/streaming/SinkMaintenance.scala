@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Connectors
 
-/** Retention for the `batch_id=<id>/symbol=<s>` streaming sink layout.
+/** Retention for the `batch_id=<id>` streaming sink layout: one
+  * (symbol, timestamp)-sorted file per table per micro-batch.
   *
   * [[MinuteStream.writeBatch]] keys each micro-batch's dynamic-partition
   * overwrite on `batch_id` — that is what makes at-least-once replay
@@ -33,6 +34,10 @@ import graft.sources.Connectors
   * still finds every directory of its snapshot on disk. A crash at any
   * point leaves a state the next call converges from, by the same
   * masking argument.
+  *
+  * Migration: Spark's partition discovery rejects a table that mixes
+  * this layout with the earlier `batch_id=<id>/symbol=<s>` one, so
+  * rewrite such a sink or start it fresh.
   */
 object SinkMaintenance {
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -64,13 +69,14 @@ object SinkMaintenance {
 
   /** Fold finalized batch partitions (id < the maximum id present) plus
     * the previous cumulative partition into one new cumulative
-    * partition, then delete the sources. Skips the rewrite while fewer
-    * than `minBatches` finalized partitions are pending, so the (large)
-    * cumulative partition is rewritten every ~minBatches triggers, not
-    * every call; stale directories from an earlier crash are always
-    * cleaned. Call it every K batches or from a scheduler — partition
-    * count then stays O(minBatches) over the stream's lifetime instead
-    * of O(triggers). */
+    * partition; the NEXT call deletes the sources (the grace window in
+    * the object doc). Skips the rewrite while fewer than `minBatches`
+    * finalized partitions are pending, so the (large) cumulative
+    * partition is rewritten every ~minBatches triggers, not every call;
+    * stale directories from an earlier crash are always cleaned. Call
+    * it every K batches or from a scheduler — partition count then
+    * stays O(minBatches) over the stream's lifetime instead of
+    * O(triggers). */
   def compact(spark: SparkSession, dir: String, minBatches: Int = 8,
               clusterBy: Seq[String] = Nil, clusterBits: Int = 16): Unit = {
     val (fs, root) = fsFor(spark, dir)
@@ -91,45 +97,30 @@ object SinkMaintenance {
         .map(id => s"$dir/batch_id=$id")
       val merged = spark.read.option("basePath", dir).parquet(srcPaths: _*)
         .withColumn("batch_id", lit(target))
-      // Optional layout pass piggy-backed on the fold (the compaction
-      // is the one moment the sink's rows are rewritten anyway): rows
-      // are range-partitioned and sorted on (symbol, cluster key) —
-      // Morton zkey for 2+ columns (operators.Layout), plain order for
-      // one — so each compacted file covers a DISJOINT cluster-key
-      // range with narrow min/max stats on every cluster column (the
-      // zorderWrite layout). Costs one range exchange of the fold,
-      // only when clustering is requested.
+      // Rows stay symbol-sorted, so symbol reads keep pruning row
+      // groups. Optional clustering piggy-backs on the fold: rows are
+      // range-partitioned and sorted on (symbol, cluster key) — Morton
+      // zkey for 2+ columns (operators.Layout), plain order for one —
+      // so each file covers a DISJOINT cluster-key range (the
+      // zorderWrite layout), at the cost of one range exchange.
       def layout(key: org.apache.spark.sql.Column) = merged
         .withColumn("__ck", key)
         .repartitionByRange(col("symbol"), col("__ck"))
         .sortWithinPartitions(col("symbol"), col("__ck"))
         .drop("__ck")
       val clustered = clusterBy match {
-        case Nil => merged
+        case Nil => merged.sortWithinPartitions("symbol", "timestamp")
         case one :: Nil => layout(col(one))
         case many =>
           layout(graft.operators.Layout.zkey(many.map(col), clusterBits))
       }
-      Connectors.overwritePartitions(clustered, dir, Seq("batch_id", "symbol"))
+      Connectors.overwritePartitions(clustered, dir, Seq("batch_id"))
     }
-    // Deferred deletion: the dirs the new cumulative partition subsumes
-    // are NOT removed here — the cleanup sweep at the top of the NEXT
-    // compact() call deletes them (they are "covered by the widest
-    // cumulative" by then). The one-cycle grace window is what makes
-    // concurrent readers safe: a reader that listed the sink just
-    // before this fold still finds every directory its snapshot
-    // references on disk, so its scan can neither crash on a deleted
-    // path nor miss rows — it only has to finish within one compaction
-    // interval (minutes to an hour at production cadence). [[read]]
-    // masks the temporary duplicates either way. Storage cost: one
-    // fold's worth of source partitions, held for one cycle.
+    // Deferred deletion: the sources stay on disk until the sweep at
+    // the top of the next call, so a reader that listed the sink just
+    // before this fold finds every directory of its snapshot.
   }
 
-  /** Crash-consistent view of the sink: the widest cumulative partition
-    * plus every live batch beyond its coverage. Duplicates from a
-    * compaction that crashed before cleanup are filtered out here; the
-    * predicate prunes on the batch_id partition column, so masked
-    * directories never reach the scan. */
   /** Whether the sink holds any batch partition yet. The remote-FS-safe
     * existence probe to call before [[read]] — a partition-less sink has
     * no schema to infer, and `java.io.File` probing doesn't exist on
@@ -139,6 +130,11 @@ object SinkMaintenance {
     partitionIds(fs, root).nonEmpty
   }
 
+  /** Crash-consistent view of the sink: the widest cumulative partition
+    * plus every live batch beyond its coverage. Duplicates from a
+    * compaction that crashed before cleanup are filtered out here; the
+    * predicate prunes on the batch_id partition column, so masked
+    * directories never reach the scan. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val (fs, root) = fsFor(spark, dir)
     val hi = coveredHi(partitionIds(fs, root))

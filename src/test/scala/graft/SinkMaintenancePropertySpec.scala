@@ -96,7 +96,7 @@ class SinkMaintenancePropertySpec extends AnyFunSuite {
     val cumDir = new java.io.File(s"$out/bars").listFiles()
       .filter(_.getName.startsWith("batch_id=-")).map(_.getPath)
     assert(cumDir.nonEmpty, "compaction must produce a cumulative partition")
-    val closes = spark.read.parquet(s"${cumDir.head}/symbol=AAPL")
+    val closes = spark.read.parquet(cumDir.head).where($"symbol" === "AAPL")
       .select("close").as[Double].collect()
     assert(closes.length >= 40) // ids 0..1 are checkpoint-final at compact time
     assert(closes.toSeq == closes.sorted.toSeq,

@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - star-schema tables are read through `graft.sources.Tables`, so
   *     the per-session catalog cannot be skipped quietly (each bypass
   *     brings back a schema-inference job per call);
+  *   - no streaming sink partitions its files by `symbol`: a batch's
+  *     rows go to one symbol-sorted file, pruned by row-group statistics
+  *     (a directory per symbol wrote hundreds of files per drain);
   *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
   *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
   *     A/B justifies it, so adding one means editing that list on
@@ -74,6 +77,31 @@ class SourceLintSpec extends AnyFunSuite {
     // the scan covers the query surface and the operators
     assert(main.exists(_._1.endsWith(Paths.get("graft", "Queries.scala"))))
     assert(main.exists(_._1.toString.contains("/operators/")))
+  }
+
+  test("streaming sinks do not partition their files by symbol") {
+    // the last argument (the partition columns) of every
+    // `overwritePartitions(` call in graft/streaming
+    def calls(src: String): Seq[String] =
+      """overwritePartitions\s*\(""".r.findAllMatchIn(src).map { m =>
+        var (i, depth, lastArg) = (m.end, 1, m.end)
+        while (depth > 0 && i < src.length) {
+          src(i) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case ',' if depth == 1 => lastArg = i + 1
+            case _ =>
+          }
+          i += 1
+        }
+        src.substring(lastArg, i - 1)
+      }.toSeq
+    val streaming = main.filter(_._1.toString.contains("/graft/streaming/"))
+    val all = streaming.flatMap { case (p, src) => calls(src).map(p.getFileName -> _) }
+    // MinuteStream's batch write and SinkMaintenance's fold
+    assert(all.map(_._1.toString).toSet == Set("MinuteStream.scala", "SinkMaintenance.scala"))
+    val bySymbol = all.filter(_._2.contains("\"symbol\""))
+    assert(bySymbol.isEmpty)
   }
 
   test("the knob literals in src/main are exactly the recorded knobs") {

@@ -113,10 +113,10 @@ class StreamEndToEndSpec extends AnyFunSuite {
     assert(dirs() == Set("batch_id=-5", "batch_id=5"))
     // crash-before-cleanup leftovers: a stale source dir reappears —
     // read() must mask it, the next compact() must delete it
-    val stale = new java.io.File(s"$out/bars/batch_id=2/symbol=AAPL")
+    val stale = new java.io.File(s"$out/bars/batch_id=2")
     stale.mkdirs()
     java.nio.file.Files.copy(
-      new java.io.File(s"$out/bars/batch_id=5/symbol=AAPL").listFiles()
+      new java.io.File(s"$out/bars/batch_id=5").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath,
       new java.io.File(stale, "leftover.parquet").toPath)
     assert(SinkMaintenance.read(spark, s"$out/bars").collect().toSet == before)
