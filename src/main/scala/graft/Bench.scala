@@ -50,7 +50,10 @@ object Bench {
     * listener bus is drained before reset and before snapshot);
     * `rows` is the top-most numOutputRows metric in the AQE-final
     * plan — the row count delivered to the noop sink modulo
-    * row-preserving wrappers (project/sort) that carry no metric. */
+    * row-preserving wrappers (project/sort) that carry no metric.
+    * `in` is `inputMetrics.bytesRead`, which for parquet scans is NOT
+    * the bytes scanned: parquet's vectored reads bypass the Hadoop FS
+    * statistics it is sampled from, so it undercounts them. */
   final case class WorkRec(sr: Long, sw: Long, spill: Long, peak: Long,
                            tasks: Long, in: Long, rows: Long, fp: String)
 

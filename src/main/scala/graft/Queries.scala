@@ -2162,7 +2162,8 @@ object Queries {
       |WHERE r_name = 'ASIA'
       |GROUP BY n_name""".stripMargin
   val q31 = q("q31_sql_nation_revenue", q31Sql) { (s, dir) =>
-    Tables.all.foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
+    Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
+      .foreach(t => Tables(s, dir, t).createOrReplaceTempView(t))
     s.sql(q31Sql)
   }
 
@@ -2271,7 +2272,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.ivfTopK(emb.filter(col("id") < 10), model, k = 5, nProbe = 4)
   }
 
@@ -2376,7 +2377,7 @@ object Queries {
     // join probes it broadcast (one map pass per frontier). For plain
     // running totals the production shape is the q26 window sum — q70
     // exists to exercise WITH RECURSIVE (UnionLoop) itself.
-    val fp = graft.sources.DerivedTables.sourceFingerprint(dir, "orders")
+    val fp = Tables.fingerprint(s, dir, "orders")
     val seqd = {
       // explicit ROWS frame: cum_l is then the prefix sum over exactly
       // the rows up to this one in (o_orderdate, o_orderkey) order — the
@@ -2649,7 +2650,7 @@ object Queries {
     val model = Similarity.ensurePqModel(s, pqModelName(dir),
       emb.filter(col("id") >= 10)
         .select(col("id").as("vec_id"), col("vec").as("embedding")),
-      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     Similarity.pqRerankTopK(emb.filter(col("id") < 10),
       emb.filter(col("id") >= 10), k = 5, shortlist = 40,
       model = Some(model))
@@ -2704,12 +2705,12 @@ object Queries {
     val corp = emb.filter(col("id") >= 10)
     val ivf = Similarity.ensureIvfIndex(s, ivfIndexName(dir), corp,
       nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val (codes, books) = Similarity.ensurePqModel(s, pqModelName(dir),
       corp.select(col("id").as("vec_id"), col("vec").as("embedding")),
-      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     val postings = Similarity.ensureAdcPostings(s, pqModelName(dir), ivf, codes, m = 4,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.ivfAdcTopK(emb.filter(col("id") < 10), ivf, postings, books,
       k = 5, nProbe = 4, shortlist = 40)
   }
@@ -2775,11 +2776,11 @@ object Queries {
     val corp = emb.filter(col("id") >= 10)
     val ivf = Similarity.ensureIvfIndex(s, ivfIndexName(dir), corp,
       nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val (codes, books) = Similarity.ensureResidualPqModel(s, pqResModelName(dir),
-      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     val postings = Similarity.ensureAdcPostings(s, pqResModelName(dir), ivf,
-      codes, m = 4, fingerprint = Some(embFp(dir)))
+      codes, m = 4, fingerprint = Some(embFp(s, dir)))
     Similarity.ivfAdcResidualTopK(emb.filter(col("id") < 10), ivf, postings,
       books, k = 5, nProbe = 4, shortlist = 40)
   }
@@ -2822,7 +2823,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.semanticDedup(model, threshold = 0.3)
       .select(col("vec_id"), col("cid").cast("long").as("cid"),
         col("cos_keeper"), col("keep"))
@@ -2841,8 +2842,8 @@ object Queries {
 
   /** Source fingerprint of the embeddings table — staleness key for
     * every persisted ANN artifact derived from it. */
-  private def embFp(dir: String): String =
-    graft.sources.DerivedTables.sourceFingerprint(dir, "embeddings")
+  private def embFp(s: SparkSession, dir: String): String =
+    Tables.fingerprint(s, dir, "embeddings")
 
   /** Catalog-safe PQ-model name, unique per SF directory. */
   private def pqModelName(dir: String): String =
@@ -2867,8 +2868,7 @@ object Queries {
       "doc_id", "text",
       graft.plans.TextHash.classifierScore(TextOps.tokens(col("text"))) > 0L,
       nBuckets = LrBuckets, rounds = LrRounds,
-      fingerprint = Some(
-        graft.sources.DerivedTables.sourceFingerprint(dir, "documents")))
+      fingerprint = Some(Tables.fingerprint(s, dir, "documents")))
 
   /** One-time artifact builds that should not land in any timed query:
     * the s04 IVF index and the d07/d08 near-dup cluster table.
@@ -2879,23 +2879,23 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val ivf = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.ensureIvfIndex(s, ivfLblIndexName(dir),
       Tables.embeddings(s, dir).select(col("vec_id").as("id"),
           col("embedding").cast("array<double>").as("vec"), col("label"))
         .filter(col("id") >= 10),
       nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)), extraCols = Seq("label"))
+      fingerprint = Some(embFp(s, dir)), extraCols = Seq("label"))
     val (codes, _) = Similarity.ensurePqModel(s, pqModelName(dir),
       emb.filter(col("id") >= 10)
         .select(col("id").as("vec_id"), col("vec").as("embedding")),
-      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     Similarity.ensureAdcPostings(s, pqModelName(dir), ivf, codes, m = 4,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val (resCodes, _) = Similarity.ensureResidualPqModel(s, pqResModelName(dir),
-      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     Similarity.ensureAdcPostings(s, pqResModelName(dir), ivf, resCodes, m = 4,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     ensureClusters(s, dir)
     ensureEventsByDate(s, dir)
     ensureBucketed(s, dir)
@@ -2923,8 +2923,7 @@ object Queries {
     import graft.sources.{Bucketing, DerivedTables}
     val name = ingestKeysName(dir)
     val tables = Seq(s"${name}_norm", s"${name}_ndband", s"${name}_ndsh")
-    DerivedTables.ensure(s, tables,
-        DerivedTables.sourceFingerprint(dir, "documents")) {
+    DerivedTables.ensure(s, tables, Tables.fingerprint(s, dir, "documents")) {
       val corpus = Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= 0)
       Bucketing.writeBucketed(
@@ -2952,7 +2951,7 @@ object Queries {
     import graft.sources.DerivedTables
     val name = lexIndexName(dir)
     DerivedTables.ensure(s, Seq(s"${name}_post", s"${name}_lexstats"),
-        DerivedTables.sourceFingerprint(dir, "documents")) {
+        Tables.fingerprint(s, dir, "documents")) {
       TextAnalysis.saveLexicalIndex(s, name,
         Tables.documents(s, dir).filter(col("doc_id") >= 10), "doc_id", "text")
     }
@@ -2970,7 +2969,7 @@ object Queries {
   def ensureEventsByDate(s: SparkSession, dir: String): DataFrame = synchronized {
     import graft.sources.DerivedTables
     val name = eventsByDateName(dir)
-    DerivedTables.ensure(s, Seq(name), DerivedTables.sourceFingerprint(dir, "events")) {
+    DerivedTables.ensure(s, Seq(name), Tables.fingerprint(s, dir, "events")) {
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date")
@@ -2992,7 +2991,7 @@ object Queries {
   def ensureClusters(s: SparkSession, dir: String): DataFrame = synchronized {
     import graft.sources.DerivedTables
     val name = clustersName(dir)
-    DerivedTables.ensure(s, Seq(name), DerivedTables.sourceFingerprint(dir, "documents")) {
+    DerivedTables.ensure(s, Seq(name), Tables.fingerprint(s, dir, "documents")) {
       Dedup.clusters(
         Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text", threshold = 0.5)
           .select("doc_a", "doc_b"))
@@ -3012,7 +3011,7 @@ object Queries {
   def ensureCorpusClusters(s: SparkSession, dir: String): DataFrame = synchronized {
     import graft.sources.DerivedTables
     val name = corpusClustersName(dir)
-    DerivedTables.ensure(s, Seq(name), DerivedTables.sourceFingerprint(dir, "documents")) {
+    DerivedTables.ensure(s, Seq(name), Tables.fingerprint(s, dir, "documents")) {
       Dedup.clusters(
         Dedup.jaccardPairs(
             Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 0),
@@ -3696,7 +3695,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val queries = emb.filter(col("id") < 10)
     val ann = Similarity.ivfTopK(queries, model, k = 5, nProbe = 4)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
@@ -3793,7 +3792,7 @@ object Queries {
     val lexName = ensureLexicalIndex(s, dir)
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)), coFamilies = Seq(lexName))
+      fingerprint = Some(embFp(s, dir)), coFamilies = Seq(lexName))
     val vleg = Similarity.ivfTopK(emb.filter(col("id") < 10), model,
         k = 20, nProbe = 4)
       .select("query_id", "neighbor_id", "rn")
@@ -4169,11 +4168,11 @@ object Queries {
     import graft.sources.DerivedTables
     val li = bucketedName(dir, "lineitem")
     val ord = bucketedName(dir, "orders")
-    DerivedTables.ensure(s, Seq(li), DerivedTables.sourceFingerprint(dir, "lineitem")) {
+    DerivedTables.ensure(s, Seq(li), Tables.fingerprint(s, dir, "lineitem")) {
       graft.sources.Bucketing.writeBucketed(
         Tables.lineitem(s, dir), li, "l_orderkey", 8)
     }
-    DerivedTables.ensure(s, Seq(ord), DerivedTables.sourceFingerprint(dir, "orders")) {
+    DerivedTables.ensure(s, Seq(ord), Tables.fingerprint(s, dir, "orders")) {
       graft.sources.Bucketing.writeBucketed(
         Tables.orders(s, dir), ord, "o_orderkey", 8)
     }
@@ -5185,7 +5184,7 @@ object Queries {
       col("embedding").cast("array<double>").as("vec"), col("label"))
     val model = Similarity.ensureIvfIndex(s, ivfLblIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2,
-      portableInit = true, fingerprint = Some(embFp(dir)),
+      portableInit = true, fingerprint = Some(embFp(s, dir)),
       extraCols = Seq("label"))
     Similarity.ivfFilteredTopK(emb.filter(col("id") < 10), model,
       k = 5, nProbe = 4, filterCol = "label")
@@ -5210,7 +5209,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.ivfCellStats(model)
   }
 
@@ -5310,7 +5309,7 @@ object Queries {
     val corp = Tables.embeddingsFanned(s, dir).filter(col("vec_id") >= 10)
     val (codes, books) = Similarity.ensurePqModel(s, pqModelName(dir),
       corp, m = 4, k = 8, iters = 2, dim = 64,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.pqDistortion(corp, codes, books)
   }
 
@@ -5456,7 +5455,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val queries = emb.filter(col("id") < 10)
     val exact = Similarity.bruteForceTopK(queries, emb.filter(col("id") >= 10), 5)
       .select("query_id", "neighbor_id").localCheckpoint(false)
@@ -5560,11 +5559,11 @@ object Queries {
     val corp = emb.filter(col("id") >= 10)
     val ivf = Similarity.ensureIvfIndex(s, ivfIndexName(dir), corp,
       nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     val (codes, books) = Similarity.ensureResidualPqModel(s, pqResModelName(dir),
-      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      ivf, m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     val postings = Similarity.ensureAdcPostings(s, pqResModelName(dir), ivf,
-      codes, m = 4, fingerprint = Some(embFp(dir)))
+      codes, m = 4, fingerprint = Some(embFp(s, dir)))
     val queries = emb.filter(col("id") < 10)
     val exact = Similarity.bruteForceTopK(queries, corp, 5)
       .select("query_id", "neighbor_id").localCheckpoint(false)
@@ -5879,12 +5878,12 @@ object Queries {
       col("embedding").cast("array<double>").as("vec"), col("label"))
     val lblModel = Similarity.ensureIvfIndex(s, ivfLblIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2,
-      portableInit = true, fingerprint = Some(embFp(dir)),
+      portableInit = true, fingerprint = Some(embFp(s, dir)),
       extraCols = Seq("label"))
     val (codes, books) = Similarity.ensurePqModel(s, pqModelName(dir),
       emb.filter(col("id") >= 10)
         .select(col("id").as("vec_id"), col("vec").as("embedding")),
-      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(dir)))
+      m = 4, k = 8, iters = 2, dim = 64, fingerprint = Some(embFp(s, dir)))
     // postings DERIVED from two persisted artifacts (labeled
     // assignments × PQ codes) — one bucket-aligned join; a deployment
     // at maintenance cadence lands them as a table with the same
@@ -5940,7 +5939,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.segmentDriftReport(model,
       emb.filter(col("id") >= 10 && pmod(col("id"), lit(2)) === 0)
         .select("vec"),
@@ -5967,7 +5966,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.prototypeSelect(model, k = 8)
   }
 
@@ -6000,7 +5999,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.semDedupCellStats(model, threshold = 0.45)
   }
 
@@ -6045,7 +6044,7 @@ object Queries {
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = Similarity.ensureIvfIndex(s, ivfIndexName(dir),
       emb.filter(col("id") >= 10), nCentroids = 16, iters = 2, portableInit = true,
-      fingerprint = Some(embFp(dir)))
+      fingerprint = Some(embFp(s, dir)))
     Similarity.semDedupCellStatsCapped(model, threshold = 0.45, maxCell = 30)
   }
 

@@ -2133,7 +2133,7 @@ object TextAnalysis {
     * return the model named `name`, training it from `train` (by-name
     * — not evaluated on the hot path) and persisting it only when the
     * catalog doesn't already hold a fresh one. With a `fingerprint`
-    * (see `DerivedTables.sourceFingerprint`), "fresh" additionally
+    * (the source's `Tables.fingerprint`), "fresh" additionally
     * means "trained on the data currently on disk" — an in-place
     * corpus regeneration invalidates the persisted model. A persisted
     * model whose hyper-parameters disagree with the request is

@@ -1,69 +1,33 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 
 /** Staleness guard for build-once / read-many derived catalog tables
   * (bucketed facts, cluster assignments, ANN indexes, partitioned
-  * layouts). Each derived table records a fingerprint of its SOURCE
-  * data in TBLPROPERTIES at build time; consumers rebuild when the
-  * data on disk no longer matches — so regenerating testdata in place
-  * under the same path (the round-6 failure mode) is detected instead
-  * of silently serving stale derived state.
+  * layouts, persisted models). Each derived table records the
+  * [[Tables.fingerprint]] of its SOURCE data in TBLPROPERTIES at build
+  * time, the `Tables` catalog's own invalidation key on any Hadoop path,
+  * and is rebuilt when the data on disk no longer matches (an in-place
+  * regeneration under the same path). No file-system code lives here.
   */
 object DerivedTables {
   private val Prop = "graft.fingerprint"
 
-  /** Cheap content fingerprint of a source parquet path: recursive
-    * (file count, total bytes, newest mtime, plus an order-independent
-    * per-file mix of name/size/mtime so a same-total rewrite within
-    * mtime granularity still changes the print). Not a data hash — an
-    * identical-bytes rewrite with a newer mtime reads as changed,
-    * which errs on the safe side (rebuild) at O(directory listing)
-    * cost, never O(data). */
-  def sourceFingerprint(dir: String, table: String): String =
-    sourceFingerprintPath(new java.io.File(dir, s"$table.parquet").toString)
-
-  /** [[sourceFingerprint]] for a bare parquet path (the EdgeRunner
-    * `file:/dir` inputs, which don't follow the `<dir>/<table>.parquet`
-    * testdata layout). */
-  def sourceFingerprintPath(path: String): String = {
-    // A nonexistent path (typo'd dir, non-local URI) would otherwise
-    // fold to the CONSTANT "n0-sz0-mt0-x0" fingerprint — every build
-    // would then stamp and match it, silently reinstating the very
-    // stale-artifact failure mode this guard exists to catch. Local
-    // java.io listing is the fingerprint's contract; remote stores
-    // need a FileSystem-based fingerprint, not a silent constant.
-    val root = new java.io.File(path)
-    require(root.exists(),
-      s"sourceFingerprint: $root does not exist (or is not a local " +
-        "path) — refusing to fingerprint; a constant print would mark " +
-        "derived tables permanently fresh")
-    def scan(f: java.io.File): (Long, Long, Long, Long) =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .foldLeft((0L, 0L, 0L, 0L)) { case ((n, sz, mt, mx), c) =>
-            val (cn, csz, cmt, cmx) = scan(c)
-            (n + cn, sz + csz, math.max(mt, cmt), mx + cmx)
-          }
-      else (1L, f.length(),
-        f.lastModified(),
-        f.getName.hashCode.toLong * 1000003L + f.length() * 31L + f.lastModified())
-    val (n, sz, mt, mx) = scan(root)
-    s"n$n-sz$sz-mt$mt-x$mx"
-  }
-
+  /** The stamp on `table`, or None when the table is absent. Any other
+    * catalog failure propagates: a broken metastore is not "stale". */
   private def recorded(s: SparkSession, table: String): Option[String] =
     try {
-      s.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
         .properties.get(Prop)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case _: NoSuchTableException => None }
 
   /** Table exists AND its recorded source fingerprint matches `fp`.
     * A table written before fingerprinting existed (no property)
     * counts as stale — rebuilt once, then stamped. */
   def fresh(s: SparkSession, table: String, fp: String): Boolean =
-    s.catalog.tableExists(table) && recorded(s, table).contains(fp)
+    recorded(s, table).contains(fp)
 
   def stamp(s: SparkSession, table: String, fp: String): Unit =
     s.sql(s"ALTER TABLE $table SET TBLPROPERTIES('$Prop'='$fp')")

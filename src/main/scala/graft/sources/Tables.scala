@@ -21,12 +21,14 @@ import org.apache.spark.sql.sources.BaseRelation
   * attribute ids, so two calls for the same table can be joined to each
   * other with DataFrame column references (q10, the pair joins).
   *
-  *  - Invalidation: an entry is keyed on the (path, length, mtime) of the
-  *    table's leaf files. A single-file table costs one `stat` per call;
-  *    a directory table (a MakeScale replica) is listed, because
-  *    rewriting a part file in place leaves the directory's own mtime
-  *    alone. A missing path fails with the file system's
-  *    FileNotFoundException.
+  *  - Invalidation: an entry is keyed on [[fingerprint]] (the
+  *    (path, length, mtime) of the table's leaf files), and so is every
+  *    derived artifact ([[DerivedTables]]): a rewrite re-resolves the
+  *    table and rebuilds what was derived from it, or neither. A
+  *    single-file table costs one `stat` per call; a directory table (a
+  *    MakeScale replica) is listed, because rewriting a part file in
+  *    place leaves the directory's own mtime alone. A missing path
+  *    fails with the file system's FileNotFoundException.
   *  - Session scope: a `HadoopFsRelation` holds its `SparkSession`, so
   *    entries are keyed by session identity and never served to another
   *    session (a `spark.newSession()` child resolves its own). Every
@@ -68,7 +70,7 @@ object Tables {
     * relation over them. */
   private final class Entry(fs: FileSystem, leaves: Seq[FileStatus],
                             val relation: BaseRelation) {
-    val fingerprint: Seq[(String, Long, Long)] = fingerprintOf(leaves)
+    val fingerprint: String = fingerprintOf(leaves)
 
     /** Footer summary for [[fanOut]], read on first use (~1 ms a file). */
     lazy val meta: FileMeta = {
@@ -84,8 +86,12 @@ object Tables {
     }
   }
 
-  private def fingerprintOf(leaves: Seq[FileStatus]): Seq[(String, Long, Long)] =
-    leaves.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+  /** SHA-256 hex of the leaves' (qualified path, length, mtime). */
+  private def fingerprintOf(leaves: Seq[FileStatus]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(leaves
+      .map(st => s"${st.getPath}\u0000${st.getLen}\u0000${st.getModificationTime}")
+      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
 
   /** The files Spark would scan under `p`: `p` itself, or every
     * non-hidden file below it (`_SUCCESS`, `.crc` and the like skipped). */
@@ -103,6 +109,24 @@ object Tables {
       out.result().sortBy(_.getPath.toString)
     }
   }
+
+  /** The file system of `path` and its [[leafFiles]]. */
+  private def leavesOf(spark: SparkSession, path: String): (FileSystem, Seq[FileStatus]) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, leafFiles(fs, p))
+  }
+
+  /** "Has this table's data changed", for the catalog and every derived
+    * artifact: a digest of the files Spark would scan under `path`, any
+    * Hadoop path. Lists `path` without resolving it (no Spark job, any
+    * file format); a missing path throws FileNotFoundException. */
+  def fingerprint(spark: SparkSession, path: String): String =
+    fingerprintOf(leavesOf(spark, path)._2)
+
+  /** [[fingerprint]] of the table `dir/name.parquet`. */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String =
+    fingerprint(spark, s"$dir/$name.parquet")
 
   private val catalog = new ConcurrentHashMap[(SparkSession, String), Entry]
   private val watched = ConcurrentHashMap.newKeySet[SparkContext]()
@@ -129,9 +153,7 @@ object Tables {
     // whether Tables.events happened to run first in the session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = leafFiles(fs, p)
+    val (fs, leaves) = leavesOf(spark, path)
     val key = (spark, path)
     val cached = catalog.get(key)
     if (cached != null && cached.fingerprint == fingerprintOf(leaves)) cached

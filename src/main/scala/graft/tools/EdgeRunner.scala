@@ -1591,14 +1591,14 @@ object EdgeRunner {
     * column upstream when human labels exist). The persisted model
     * then serves `--mode classify --model` and the trained streaming
     * admission gate (`--mode corpus --model`) WITHOUT retraining per
-    * run. Idempotent: the DerivedTables source fingerprint makes a
+    * run. Idempotent: the corpus's `Tables.fingerprint` makes a
     * re-run over unchanged data a catalog no-op, while a regenerated
     * corpus triggers a retrain (the staleness guard). */
   def runTrain(spark: SparkSession, cfg: Config): Long = {
     require(cfg.in.startsWith("file:"), "train mode requires --in file:/dir")
     require(cfg.model.nonEmpty, "train mode requires --model <family>")
     val path = cfg.in.stripPrefix("file:")
-    val fp = graft.sources.DerivedTables.sourceFingerprintPath(path)
+    val fp = graft.sources.Tables.fingerprint(spark, path)
     val model = graft.operators.TextAnalysis.ensureLogisticModel(spark,
       cfg.model, spark.read.parquet(path), "doc_id", "text",
       graft.plans.TextHash.classifierScore(

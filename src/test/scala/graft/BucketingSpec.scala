@@ -13,7 +13,7 @@ class BucketingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_dt").toString
     val src = new java.io.File(dir, "tbl.parquet")
     java.nio.file.Files.write(src.toPath, "v1-bytes".getBytes)
-    val fp1 = DerivedTables.sourceFingerprint(dir, "tbl")
+    val fp1 = Tables.fingerprint(spark, dir, "tbl")
     var builds = 0
     def build(): Unit = {
       builds += 1
@@ -26,7 +26,7 @@ class BucketingSpec extends AnyFunSuite {
     // regenerate the source IN PLACE (same path, different content):
     // the round-6 failure mode — a path-keyed cache would serve stale
     java.nio.file.Files.write(src.toPath, "v2-bytes-longer".getBytes)
-    val fp2 = DerivedTables.sourceFingerprint(dir, "tbl")
+    val fp2 = Tables.fingerprint(spark, dir, "tbl")
     assert(fp2 != fp1, "fingerprint must change with the data")
     DerivedTables.ensure(spark, Seq("graft_dt_spec"), fp2) { build() }
     assert(builds == 2, "changed source must rebuild")

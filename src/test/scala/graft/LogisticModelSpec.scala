@@ -62,8 +62,8 @@ class LogisticModelSpec extends AnyFunSuite {
   }
 
   test("ensure is build-once; staleness and param drift each retrain") {
-    import graft.sources.DerivedTables
-    val fp1 = DerivedTables.sourceFingerprint(sf, "documents")
+    import graft.sources.Tables
+    val fp1 = Tables.fingerprint(spark, sf, "documents")
     var builds = 0
     def corpus = { builds += 1; docs }
     def ensure(rounds: Int, fp: String) =

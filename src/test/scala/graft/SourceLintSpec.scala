@@ -14,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - star-schema tables are read through `graft.sources.Tables`, so
   *     the per-session catalog cannot be skipped quietly (each bypass
   *     brings back a schema-inference job per call);
+  *   - `DerivedTables` holds no file-system code: derived artifacts
+  *     take their freshness key from `Tables.fingerprint`, the
+  *     catalog's own, so the two rules for "has this table changed"
+  *     cannot fork again;
   *   - no streaming sink partitions its files by `symbol`: a batch's
   *     rows go to one symbol-sorted file, pruned by row-group statistics
   *     (a directory per symbol wrote hundreds of files per drain);
@@ -77,6 +81,14 @@ class SourceLintSpec extends AnyFunSuite {
     // the scan covers the query surface and the operators
     assert(main.exists(_._1.endsWith(Paths.get("graft", "Queries.scala"))))
     assert(main.exists(_._1.toString.contains("/operators/")))
+  }
+
+  test("DerivedTables holds no file-system code") {
+    val src = main.collectFirst {
+      case (p, src) if p.endsWith(Paths.get("graft", "sources", "DerivedTables.scala")) => src
+    }
+    assert(src.isDefined)
+    assert(Seq("java.io.File", "FileSystem", "listFiles").filter(src.get.contains).isEmpty)
   }
 
   test("streaming sinks do not partition their files by symbol") {

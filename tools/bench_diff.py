@@ -48,7 +48,9 @@ def load(path):
     return json.loads(txt.splitlines()[-1])
 
 
-WORK_FIELDS = ("sr", "sw", "in", "rows", "tasks")  # noise-free axes
+# noise-free axes; "in" (inputMetrics.bytesRead) is not the bytes scanned
+# for parquet: parquet's vectored reads bypass the Hadoop FS statistics
+WORK_FIELDS = ("sr", "sw", "in", "rows", "tasks")
 ENV_FIELDS = ("spill", "peak")                      # pressure-dependent
 
 
