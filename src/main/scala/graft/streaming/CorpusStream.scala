@@ -147,7 +147,8 @@ object CorpusStream {
       outDir, checkpoint, trigger)
 
   private def sink(df: DataFrame, outDir: String, checkpoint: String,
-                   trigger: Trigger): StreamingQuery =
+                   trigger: Trigger): StreamingQuery = {
+    LocalCheckpointFiles.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -156,4 +157,5 @@ object CorpusStream {
       .format("parquet")
       .option("path", outDir)
       .start()
+  }
 }

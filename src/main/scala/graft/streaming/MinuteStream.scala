@@ -74,28 +74,32 @@ object MinuteStream {
     * analogue of the reference's symbol index: symbol reads prune row
     * groups by min/max. `count()` computes the persisted batch in
     * parallel before `coalesce(1)` would pull the stateful stages into
-    * one task; an empty batch (and its replay) writes nothing. Public so
-    * replay is testable (call twice with one id). Bound the partition
-    * count with [[SinkMaintenance.compact]] (`compactEvery` in [[start]])
-    * and read through [[SinkMaintenance.read]]. */
+    * one task; an empty batch (and its replay) writes nothing. The
+    * metrics come from the sorted single partition, which already meets
+    * the window's clustering and order: that job runs no shuffle and no
+    * second sort. Public so replay is testable (call twice with one
+    * id). Bound the partition count with [[SinkMaintenance.compact]]
+    * (`compactEvery` in [[start]]) and read through
+    * [[SinkMaintenance.read]]. */
   def writeBatch(batch: DataFrame, batchId: Long, outDir: String,
                  threshold: Double = Metrics.AnomalyThreshold,
                  onAlert: DataFrame => Unit = _ => ()): Unit = {
     def write(df: DataFrame, table: String): Unit = Connectors.overwritePartitions(
-      df.coalesce(1).sortWithinPartitions("symbol", "timestamp")
-        .withColumn("batch_id", lit(batchId)), s"$outDir/$table", Seq("batch_id"))
+      df.withColumn("batch_id", lit(batchId)), s"$outDir/$table", Seq("batch_id"))
     batch.persist()
     try {
       if (batch.count() > 0) {
-        write(batch, "bars")
-        val metrics = metricsOnBars(batch, threshold)
+        val bars = batch.coalesce(1).sortWithinPartitions("symbol", "timestamp")
+        write(bars, "bars")
+        val metrics = metricsOnBars(bars, threshold)
         write(metrics, "metrics")
         onAlert(metrics.filter(col("is_anomaly")))
       }
     } finally { batch.unpersist(); () }
   }
 
-  /** T1/T2/T7 + S6: 1-minute micro-batches, checkpointed, foreachBatch
+  /** T1/T2/T7 + S6: 1-minute micro-batches, checkpointed through
+    * [[LocalCheckpointFiles]], foreachBatch
     * sink writing bars + metrics parquet (idempotent batch_id-keyed
     * partitions, one symbol-sorted file each — see [[writeBatch]]).
     * Alert rows = metrics filtered on the flag — pass
@@ -112,8 +116,8 @@ object MinuteStream {
             onAlert: DataFrame => Unit = _ => (),
             compactEvery: Int = 60,
             compactMinBatches: Int = 8): StreamingQuery = {
-    val bars = minuteBars(parseTrades(envelopes))
-    bars.writeStream
+    LocalCheckpointFiles.install(envelopes.sparkSession)
+    minuteBars(parseTrades(envelopes)).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

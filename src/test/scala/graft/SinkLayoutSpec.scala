@@ -6,9 +6,19 @@ import java.nio.file.Files
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.streaming.{MinuteStream, SinkMaintenance}
+
+/** Walks adaptive plans into their final query stages. */
+private object PlanWalk extends AdaptiveSparkPlanHelper
 
 /** The trade-stream sink layout: `batch_id=<id>/` holds one parquet file
   * per table per micro-batch, its rows sorted by (symbol, timestamp), so
@@ -54,6 +64,31 @@ class SinkLayoutSpec extends AnyFunSuite {
       assert(keys == keys.sortBy { case (s, t) => (s, t.getTime) },
         s"$table rows must be in (symbol, timestamp) order")
     }
+  }
+
+  test("the metrics write reuses the sorted bars: no shuffle") {
+    // the window needs its rows clustered by symbol and ordered by
+    // (symbol, timestamp); the single sorted partition the bars are
+    // written from already is, so the metrics job plans no exchange
+    val out = Files.createTempDirectory("graft_sink_metrics_plan").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { MinuteStream.writeBatch(bars(6, 4L), 0L, out); GraftBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    val metricsWrite = plans.asScala.filter(PlanWalk.find(_) {
+      case DataWritingCommandExec(w: InsertIntoHadoopFsRelationCommand, _) =>
+        w.outputPath.getName == "metrics"
+      case _ => false
+    }.isDefined).toSeq
+    assert(metricsWrite.size == 1)
+    val shuffles = PlanWalk.collect(metricsWrite.head) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.isEmpty, s"metrics write plan:\n${metricsWrite.head}")
   }
 
   test("an empty micro-batch, and its replay, writes nothing") {

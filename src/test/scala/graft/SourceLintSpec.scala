@@ -21,6 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no streaming sink partitions its files by `symbol`: a batch's
   *     rows go to one symbol-sorted file, pruned by row-group statistics
   *     (a directory per symbol wrote hundreds of files per drain);
+  *   - every file in `src/main` that starts a checkpointed stream
+  *     installs [[graft.streaming.LocalCheckpointFiles]] on its session,
+  *     and only that file names Spark's checkpoint-manager setting, so
+  *     no stream quietly goes back to a process fork per checkpoint file;
   *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
   *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
   *     A/B justifies it, so adding one means editing that list on
@@ -114,6 +118,19 @@ class SourceLintSpec extends AnyFunSuite {
     assert(all.map(_._1.toString).toSet == Set("MinuteStream.scala", "SinkMaintenance.scala"))
     val bySymbol = all.filter(_._2.contains("\"symbol\""))
     assert(bySymbol.isEmpty)
+  }
+
+  test("every checkpointed stream start installs LocalCheckpointFiles") {
+    val starts = main.collect {
+      case (p, src) if src.contains("\"checkpointLocation\"") => p.getFileName.toString -> src
+    }
+    assert(starts.map(_._1).contains("MinuteStream.scala"))
+    val missing = starts.collect { case (f, src) if !src.contains("LocalCheckpointFiles.install(") => f }
+    assert(missing.isEmpty)
+    val naming = main.collect {
+      case (p, src) if src.contains("checkpointFileManagerClass") => p.getFileName.toString
+    }
+    assert(naming == Seq("LocalCheckpointFiles.scala"))
   }
 
   test("the knob literals in src/main are exactly the recorded knobs") {

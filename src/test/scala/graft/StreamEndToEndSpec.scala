@@ -194,17 +194,19 @@ class StreamEndToEndSpec extends AnyFunSuite {
       s"partition count must stay bounded, got ${dirs.toSeq}")
   }
 
-  test("restart from checkpoint resumes compaction-managed sinks without loss or dup") {
-    // The T2 x compaction interplay: batchIds continue from the
-    // checkpoint after a restart, so the fold must treat pre-restart
-    // partitions as finalized history and keep the read contract intact
-    // across the boundary. Driven through the graftlog DSv2 source so
-    // the restart genuinely resumes committed offsets.
-    import graft.streaming.SinkMaintenance
+  /** The restart scenario behind the two tests below: minutes 0-5
+    * through one query, minute 6 while it is down, minutes 7-11 through
+    * a second query on the same checkpoint. The first query checkpoints
+    * through the manager class `firstManager` names, if any. Asserts
+    * every bar surfaces exactly once and compaction keeps folding;
+    * returns the checkpoint dir. Driven through the graftlog DSv2 source
+    * so the restart genuinely resumes committed offsets. */
+  private def restartAcross(firstManager: Option[String]): java.nio.file.Path = {
+    import graft.streaming.{LocalCheckpointFiles, SinkMaintenance}
     import graft.sources.Connectors
     import org.apache.spark.sql.functions.col
     val logDir = Files.createTempDirectory("graft_restart_log")
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val ckpt = Files.createTempDirectory("graft_restart_ckpt")
     val out = Files.createTempDirectory("graft_restart_out").toString
     def append(lines: String*): Unit = {
       val f = logDir.resolve("trades.log")
@@ -218,9 +220,11 @@ class StreamEndToEndSpec extends AnyFunSuite {
       s"""{"data": [{"p": $p, "s": "AAPL", "t": $t, "v": 10.0}]}"""
     def startQ() = MinuteStream.start(
       Connectors.logStream(spark, logDir.toString).select(col("value")),
-      ckpt, out, trigger = Trigger.ProcessingTime("0 seconds"),
+      ckpt.toString, out, trigger = Trigger.ProcessingTime("0 seconds"),
       compactEvery = 2, compactMinBatches = 1)
-    val q1 = startQ()
+    // a stream copies the session conf when it starts
+    firstManager.foreach(spark.conf.set(LocalCheckpointFiles.Key, _))
+    val q1 = try startQ() finally firstManager.foreach(_ => spark.conf.unset(LocalCheckpointFiles.Key))
     (0 until 6).foreach { i =>
       append(env(100.0 + i, m0 + i * 60000L + 1000))
       q1.processAllAvailable()
@@ -252,6 +256,31 @@ class StreamEndToEndSpec extends AnyFunSuite {
       s"expected a cumulative partition after restart, got ${dirs.toSeq}")
     assert(dirs.length <= 8,
       s"partition count must stay bounded across restart, got ${dirs.toSeq}")
+    ckpt
+  }
+
+  test("restart from checkpoint resumes compaction-managed sinks without loss or dup") {
+    // The T2 x compaction interplay: batchIds continue from the
+    // checkpoint after a restart, so the fold must treat pre-restart
+    // partitions as finalized history and keep the read contract intact
+    // across the boundary.
+    restartAcross(firstManager = None)
+  }
+
+  test("a checkpoint written by Spark's default manager resumes under LocalCheckpointFiles") {
+    // the default manager writes through Hadoop's checksummed local file
+    // system, which leaves a hidden `.N.crc` sidecar beside each file;
+    // the resumed query reads past them and writes none of its own
+    val ckpt = restartAcross(firstManager = Some(classOf[
+      org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName))
+    def batchIds(names: Seq[String]) = names.filter(_.forall(_.isDigit)).map(_.toLong)
+    val offsets = ckpt.resolve("offsets").toFile.list().toSeq
+    val sidecarred = batchIds(offsets.collect {
+      case n if n.startsWith(".") && n.endsWith(".crc") => n.stripPrefix(".").stripSuffix(".crc")
+    })
+    assert(sidecarred.nonEmpty, s"the first query left no sidecars: $offsets")
+    val resumed = batchIds(offsets).filter(_ > sidecarred.max)
+    assert(resumed.nonEmpty, s"the second query logged no offsets: $offsets")
   }
 
   test("AlertSink is silent on an empty frame and truncates floods") {

@@ -38,12 +38,6 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[String]
     val bars = MinuteStream.minuteBars(
       MinuteStream.parseTrades(input.toDF().withColumnRenamed("value", "value")))
-    val query = bars.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("bars_test")
-      .trigger(Trigger.AvailableNow())
-      .start()
     val m0 = 1735732800000L // minute-aligned epoch
     input.addData(
       envelope(("AAPL", 10.0, m0 + 5000, 1.0), ("AAPL", 12.0, m0 + 30000, 2.0)),
@@ -52,6 +46,14 @@ class StreamingSpec extends AnyFunSuite {
       // next minutes push the watermark past m0's window so it emits
       envelope(("AAPL", 99.0, m0 + 70000, 1.0)),
       envelope(("AAPL", 98.0, m0 + 300000, 1.0)))
+    // AvailableNow drains what the source holds when the query starts,
+    // so the trades go in first
+    val query = bars.writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName("bars_test")
+      .trigger(Trigger.AvailableNow())
+      .start()
     query.processAllAvailable()
     query.stop()
     val rows = spark.table("bars_test")
