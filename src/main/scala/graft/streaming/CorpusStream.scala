@@ -148,7 +148,7 @@ object CorpusStream {
 
   private def sink(df: DataFrame, outDir: String, checkpoint: String,
                    trigger: Trigger): StreamingQuery = {
-    LocalCheckpointFiles.install(df.sparkSession)
+    StreamDefaults.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

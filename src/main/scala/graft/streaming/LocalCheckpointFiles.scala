@@ -5,7 +5,6 @@ import java.nio.file.{Files, StandardCopyOption, StandardOpenOption, Path => Nio
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -73,14 +72,4 @@ class LocalCheckpointFiles(path: Path, hadoopConf: Configuration) extends Checkp
     mkdirs(path); raw.makeQualified(path)
   }(_.createCheckpointDirectory())
   override def close(): Unit = delegate.foreach(_.close())
-}
-
-object LocalCheckpointFiles {
-  private[graft] val Key = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Makes `spark`'s streams checkpoint through this manager, unless the
-    * session already names a manager. Call before `start()`. */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(Key).isEmpty)
-      spark.conf.set(Key, classOf[LocalCheckpointFiles].getName)
 }

@@ -555,7 +555,7 @@ object EdgeRunner {
         "compose landAndMaintain(ivfName = ...) in a custom foreachBatch")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       graft.streaming.TtlState.RocksDbProvider)
-    graft.streaming.LocalCheckpointFiles.install(spark)
+    graft.streaming.StreamDefaults.install(spark)
     // DRAIN TERMINATION: transformWithState under processing-time TTL
     // answers shouldRunAnotherBatch=true unconditionally, so with the
     // default no-data-micro-batches policy a `--drain`

@@ -83,7 +83,7 @@ object StatefulStreamBench {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       graft.streaming.TtlState.RocksDbProvider)
     // session-wide: both streams below checkpoint through it
-    graft.streaming.LocalCheckpointFiles.install(spark)
+    graft.streaming.StreamDefaults.install(spark)
     // the drain contract for processing-time-TTL state (see
     // EdgeRunner.startNearDup): without this, transformWithState
     // reports "needs another batch" forever and AvailableNow spins

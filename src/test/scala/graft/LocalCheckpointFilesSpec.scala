@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Connectors
-import graft.streaming.{LocalCheckpointFiles, MinuteStream}
+import graft.streaming.{LocalCheckpointFiles, MinuteStream, StreamDefaults}
 
 /** A local file system under another scheme, so the manager's scheme
   * rule can be exercised without a cluster. */
@@ -87,13 +87,13 @@ class LocalCheckpointFilesSpec extends AnyFunSuite {
 
   test("install keeps a manager the session already names") {
     val own = classOf[FileContextBasedCheckpointFileManager].getName
-    spark.conf.set(LocalCheckpointFiles.Key, own)
+    spark.conf.set(StreamDefaults.CheckpointManagerKey, own)
     try {
-      LocalCheckpointFiles.install(spark)
-      assert(spark.conf.get(LocalCheckpointFiles.Key) == own)
-    } finally spark.conf.unset(LocalCheckpointFiles.Key)
-    LocalCheckpointFiles.install(spark)
-    assert(spark.conf.get(LocalCheckpointFiles.Key) == classOf[LocalCheckpointFiles].getName)
+      StreamDefaults.install(spark)
+      assert(spark.conf.get(StreamDefaults.CheckpointManagerKey) == own)
+    } finally spark.conf.unset(StreamDefaults.CheckpointManagerKey)
+    StreamDefaults.install(spark)
+    assert(spark.conf.get(StreamDefaults.CheckpointManagerKey) == classOf[LocalCheckpointFiles].getName)
   }
 
   test("a drained trade stream's checkpoint has no Hadoop sidecars or temp files") {

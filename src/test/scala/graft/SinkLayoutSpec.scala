@@ -91,6 +91,23 @@ class SinkLayoutSpec extends AnyFunSuite {
     assert(shuffles.isEmpty, s"metrics write plan:\n${metricsWrite.head}")
   }
 
+  test("a new batch id compiles no new classes, and batch_id keeps its type") {
+    // codegen inlines a long literal into the write stages' source, so
+    // every batch id would compile two classes that differ only in it
+    val out = Files.createTempDirectory("graft_sink_batch_codegen").toString
+    val frame = bars(4, 5L)
+    MinuteStream.writeBatch(frame, 1L, out)
+    val again = Codegen.compiles(MinuteStream.writeBatch(frame, 2L, out))
+    assert(again == 0, s"batch 2 compiled $again classes")
+    def batchIdType = spark.read.parquet(s"$out/bars").schema("batch_id").dataType
+    assert(batchIdType == org.apache.spark.sql.types.IntegerType)
+    assert(SinkMaintenance.read(spark, s"$out/bars").count() == 2 * Symbols.size * 4)
+    SinkMaintenance.compact(spark, s"$out/bars", minBatches = 1)
+    assert(batchDirs(s"$out/bars").sorted == Seq("batch_id=-2", "batch_id=1", "batch_id=2"))
+    assert(batchIdType == org.apache.spark.sql.types.IntegerType)
+    assert(SinkMaintenance.read(spark, s"$out/bars").count() == 2 * Symbols.size * 4)
+  }
+
   test("an empty micro-batch, and its replay, writes nothing") {
     val out = Files.createTempDirectory("graft_sink_empty").toString
     MinuteStream.writeBatch(bars(2, 2L), 0L, out)

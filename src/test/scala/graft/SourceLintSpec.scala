@@ -21,10 +21,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no streaming sink partitions its files by `symbol`: a batch's
   *     rows go to one symbol-sorted file, pruned by row-group statistics
   *     (a directory per symbol wrote hundreds of files per drain);
-  *   - every file in `src/main` that starts a checkpointed stream
-  *     installs [[graft.streaming.LocalCheckpointFiles]] on its session,
-  *     and only that file names Spark's checkpoint-manager setting, so
-  *     no stream quietly goes back to a process fork per checkpoint file;
+  *   - every file in `src/main` that starts a checkpointed stream calls
+  *     the one stream-start hook, [[graft.streaming.StreamDefaults]],
+  *     and only that file names Spark's checkpoint-manager and
+  *     artifact-isolation settings, so no stream quietly goes back to a
+  *     process fork per checkpoint file or a codegen recompile per start;
   *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
   *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
   *     A/B justifies it, so adding one means editing that list on
@@ -125,12 +126,12 @@ class SourceLintSpec extends AnyFunSuite {
       case (p, src) if src.contains("\"checkpointLocation\"") => p.getFileName.toString -> src
     }
     assert(starts.map(_._1).contains("MinuteStream.scala"))
-    val missing = starts.collect { case (f, src) if !src.contains("LocalCheckpointFiles.install(") => f }
+    val missing = starts.collect { case (f, src) if !src.contains("StreamDefaults.install(") => f }
     assert(missing.isEmpty)
-    val naming = main.collect {
-      case (p, src) if src.contains("checkpointFileManagerClass") => p.getFileName.toString
+    for (key <- Seq("checkpointFileManagerClass", "spark.sql.artifact.isolation.enabled")) {
+      val naming = main.collect { case (p, src) if src.contains(key) => p.getFileName.toString }
+      assert(naming == Seq("StreamDefaults.scala"), key)
     }
-    assert(naming == Seq("LocalCheckpointFiles.scala"))
   }
 
   test("the knob literals in src/main are exactly the recorded knobs") {

@@ -202,7 +202,7 @@ class StreamEndToEndSpec extends AnyFunSuite {
     * returns the checkpoint dir. Driven through the graftlog DSv2 source
     * so the restart genuinely resumes committed offsets. */
   private def restartAcross(firstManager: Option[String]): java.nio.file.Path = {
-    import graft.streaming.{LocalCheckpointFiles, SinkMaintenance}
+    import graft.streaming.{SinkMaintenance, StreamDefaults}
     import graft.sources.Connectors
     import org.apache.spark.sql.functions.col
     val logDir = Files.createTempDirectory("graft_restart_log")
@@ -223,8 +223,8 @@ class StreamEndToEndSpec extends AnyFunSuite {
       ckpt.toString, out, trigger = Trigger.ProcessingTime("0 seconds"),
       compactEvery = 2, compactMinBatches = 1)
     // a stream copies the session conf when it starts
-    firstManager.foreach(spark.conf.set(LocalCheckpointFiles.Key, _))
-    val q1 = try startQ() finally firstManager.foreach(_ => spark.conf.unset(LocalCheckpointFiles.Key))
+    firstManager.foreach(spark.conf.set(StreamDefaults.CheckpointManagerKey, _))
+    val q1 = try startQ() finally firstManager.foreach(_ => spark.conf.unset(StreamDefaults.CheckpointManagerKey))
     (0 until 6).foreach { i =>
       append(env(100.0 + i, m0 + i * 60000L + 1000))
       q1.processAllAvailable()
