@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Connectors
 
 /** Data-layout optimization: Z-order (Morton) clustering for
   * multi-column file skipping — the OPTIMIZE-ZORDER primitive of a
@@ -77,13 +78,13 @@ object Layout {
                    bits: Int, files: Int, path: String,
                    ingestId: String): Unit = {
     require(ingestId.nonEmpty, "ingestId must be non-empty")
-    batch.withColumn("__zkey", zkey(dims.map(col), bits))
-      .withColumn("ingest_id", lit(ingestId))
-      .repartitionByRange(files, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_id").parquet(path)
+    Connectors.overwritePartitions(
+      batch.withColumn("__zkey", zkey(dims.map(col), bits))
+        .withColumn("ingest_id", lit(ingestId))
+        .repartitionByRange(files, col("__zkey"))
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey"),
+      path, Seq("ingest_id"))
     refreshManifest(spark, path, dims, ingestId)
   }
 

@@ -88,11 +88,15 @@ object Connectors {
     * checkpoint commit) overwrites its own partitions instead of
     * appending duplicates. Callers must include a per-batch key (e.g.
     * `batch_id`) in `partitionBy` — without one, a replayed batch would
-    * clobber other batches sharing its partition values. */
+    * clobber other batches sharing its partition values. `file:` paths go
+    * through an uncached [[NioLocalFileSystem]] (no `chmod` process per
+    * file): Hadoop's cache ignores `fs.file.impl` once it holds one. */
   def overwritePartitions(df: DataFrame, path: String,
                           partitionBy: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
+      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
       .partitionBy(partitionBy: _*).parquet(path)
 
   /** JSON-lines source with an EXPLICIT schema: at corpus scale an

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{CompletionException, Executors}
+import scala.util.Try
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.Schemas
@@ -77,10 +80,12 @@ object MinuteStream {
     * one task; an empty batch (and its replay) writes nothing. The
     * metrics come from the sorted single partition, which already meets
     * the window's clustering and order: that job runs no shuffle and no
-    * second sort. Public so replay is testable (call twice with one
-    * id). Bound the partition count with [[SinkMaintenance.compact]]
-    * (`compactEvery` in [[start]]) and read through
-    * [[SinkMaintenance.read]]. */
+    * second sort. The bars and metrics jobs run at the same time; once
+    * both have ended, a failure of either is rethrown (the metrics one
+    * if both fail) and the batch is unpersisted. Public so replay is
+    * testable (call twice with one id). Bound the partition count with
+    * [[SinkMaintenance.compact]] (`compactEvery` in [[start]]) and read
+    * through [[SinkMaintenance.read]]. */
   def writeBatch(batch: DataFrame, batchId: Long, outDir: String,
                  threshold: Double = Metrics.AnomalyThreshold,
                  onAlert: DataFrame => Unit = _ => ()): Unit = {
@@ -92,12 +97,23 @@ object MinuteStream {
     try {
       if (batch.count() > 0) {
         val bars = batch.coalesce(1).sortWithinPartitions("symbol", "timestamp")
-        write(bars, "bars")
         val metrics = metricsOnBars(bars, threshold)
-        write(metrics, "metrics")
+        // the bars write runs beside the metrics one, with this thread's
+        // session and job group (a stream's run id, which stop() cancels);
+        // a failed metrics write still waits for it, as unpersisting under
+        // it would recompute the stateful stages
+        val barsWrite = SQLExecution.withThreadLocalCaptured(
+          batch.sparkSession.asInstanceOf[classic.SparkSession], Writers)(write(bars, "bars"))
+        try write(metrics, "metrics") finally Try(barsWrite.join())
+        try barsWrite.join() catch { case e: CompletionException => throw e.getCause }
         onAlert(metrics.filter(col("is_anomaly")))
       }
     } finally { batch.unpersist(); () }
+  }
+
+  /** Daemon threads for [[writeBatch]]'s bars writes. */
+  private val Writers = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-sink-writer"); t.setDaemon(true); t
   }
 
   /** T1/T2/T7 + S6: 1-minute micro-batches on [[StreamDefaults]]

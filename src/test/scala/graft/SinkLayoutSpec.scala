@@ -1,11 +1,13 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.spark.GraftBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -13,8 +15,11 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 
+import graft.sources.Connectors
 import graft.streaming.{MinuteStream, SinkMaintenance}
 
 /** Walks adaptive plans into their final query stages. */
@@ -24,7 +29,8 @@ private object PlanWalk extends AdaptiveSparkPlanHelper
   * per table per micro-batch, its rows sorted by (symbol, timestamp), so
   * a symbol read prunes parquet row groups by min/max statistics where
   * the earlier layout pruned `symbol=` directories. Empty micro-batches
-  * write nothing. */
+  * write nothing. The two writes run at the same time and start no
+  * process. */
 class SinkLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -164,5 +170,96 @@ class SinkLayoutSpec extends AnyFunSuite {
       finally spark.conf.unset("parquet.hadoop.vectored.io.enabled")
     assert(pruned > 0 && pruned < full,
       s"a symbol read must skip row groups: $pruned bytes vs $full unfiltered")
+  }
+
+  /** The listener events `body` posts, in bus order. */
+  private def events(body: => Unit): Seq[SparkListenerEvent] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { seen.add(e); () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { seen.add(e); () }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = { seen.add(e); () }
+    }
+    GraftBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftBus.drain(sc) } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  test("a micro-batch write starts no chmod process") {
+    // the recording does see forks
+    assert(Forks.programs { new ProcessBuilder("true").start().waitFor(); () }.contains("true"))
+    val out = Files.createTempDirectory("graft_sink_forks").toString
+    val started = Forks.programs(MinuteStream.writeBatch(bars(6, 7L), 0L, out))
+    assert(!started.contains("chmod"), s"processes started: $started")
+    assert(parquetFiles(s"$out/bars/batch_id=0").size == 1)
+  }
+
+  test("a trade-stream drain starts no chmod or readlink process") {
+    val log = Files.createTempDirectory("graft_sink_forks_log")
+    val m0 = 1735732800000L
+    val lines = for (m <- 0 until 6; (s, i) <- Seq("AAPL", "MSFT").zipWithIndex)
+      yield s"""{"data": [{"p": ${100.0 + m + i}, "s": "$s", "t": ${m0 + m * 60000L + 1000}, "v": 10.0}]}"""
+    Files.write(log.resolve("trades.log"), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_sink_forks_out").toString
+    val started = Forks.programs {
+      val q = MinuteStream.start(
+        Connectors.logStream(spark, log.toString).select(col("value")),
+        Files.createTempDirectory("graft_sink_forks_ckpt").toString, out,
+        trigger = Trigger.AvailableNow())
+      q.awaitTermination()
+      assert(q.exception.isEmpty)
+    }
+    assert(started.filter(Set("chmod", "readlink")).isEmpty, s"processes started: $started")
+    assert(SinkMaintenance.read(spark, s"$out/bars").count() > 0)
+  }
+
+  test("the sink's directories and files keep the stock file system's modes") {
+    def modes(root: String): Map[Boolean, Set[String]] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.toSeq.groupBy(Files.isDirectory(_)).map { case (dir, ps) =>
+        dir -> ps.map((p: Path) => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+      } finally walk.close()
+    }
+    val frame = bars(4, 8L)
+    val out = Files.createTempDirectory("graft_sink_modes").toString
+    MinuteStream.writeBatch(frame, 0L, out)
+    // the same table through Hadoop's own local file system
+    val stock = Files.createTempDirectory("graft_sink_modes_stock").toString
+    frame.withColumn("batch_id", lit("0")).write.partitionBy("batch_id").parquet(s"$stock/bars")
+    val expected = Map(true -> Set("rwxr-xr-x"), false -> Set("rw-r--r--"))
+    assert(modes(s"$stock/bars") == expected)
+    for (table <- Seq("bars", "metrics")) assert(modes(s"$out/$table") == expected, table)
+  }
+
+  test("both write jobs carry the caller's job group") {
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("graft_sink_group").toString
+    sc.setJobGroup("g", "sink writes")
+    val seen = try events(MinuteStream.writeBatch(bars(4, 9L), 0L, out)) finally sc.clearJobGroup()
+    val groups = seen.collect { case e: SparkListenerJobStart => e.properties.getProperty("spark.jobGroup.id") }
+    // the count() that fills the cache (with AQE's stage jobs), then the
+    // bars and metrics writes
+    assert(groups.size >= 3 && groups.forall(_ == "g"), s"job groups: $groups")
+  }
+
+  test("a failed metrics write fails the batch after the bars write ended, then unpersists") {
+    val out = Files.createTempDirectory("graft_sink_fail").toString
+    Files.write(Paths.get(out, "metrics"), Array[Byte](1)) // a file where a directory must go
+    val frame = bars(6, 11L)
+    var failure: Option[Exception] = None
+    val seen = events {
+      failure = Some(intercept[Exception](MinuteStream.writeBatch(frame, 5L, out)))
+    }
+    assert(failure.exists(e => Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("metrics"))), s"failure: $failure")
+    assert(batchDirs(s"$out/bars") == Seq("batch_id=5"))
+    assert(spark.read.parquet(s"$out/bars").count() == Symbols.size * 6)
+    val ends = seen.zipWithIndex.collect { case (_: SparkListenerJobEnd, i) => i }
+    val unpersist = seen.indexWhere(_.isInstanceOf[SparkListenerUnpersistRDD])
+    assert(ends.size >= 2, "the count() and the bars write")
+    assert(unpersist > ends.max, s"events: ${seen.map(_.getClass.getSimpleName)}")
+    assert(spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty)
   }
 }

@@ -26,6 +26,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     and only that file names Spark's checkpoint-manager and
   *     artifact-isolation settings, so no stream quietly goes back to a
   *     process fork per checkpoint file or a codegen recompile per start;
+  *   - one writer does dynamic partition overwrites of paths,
+  *     `Connectors.overwritePartitions`: only Connectors.scala names the
+  *     `partitionOverwriteMode` write option and `fs.file.impl`, so every
+  *     such write keeps its fork-free local file system (catalog-table
+  *     writers set the session's `spark.sql.sources.` key instead);
   *   - the settable knobs (`SPARK_GRAFT_*` env vars, `spark.graft.*`
   *     confs) are exactly [[Knobs]]. A knob stays only if a recorded
   *     A/B justifies it, so adding one means editing that list on
@@ -131,6 +136,13 @@ class SourceLintSpec extends AnyFunSuite {
     for (key <- Seq("checkpointFileManagerClass", "spark.sql.artifact.isolation.enabled")) {
       val naming = main.collect { case (p, src) if src.contains(key) => p.getFileName.toString }
       assert(naming == Seq("StreamDefaults.scala"), key)
+    }
+  }
+
+  test("only Connectors names the dynamic-overwrite option and the file-system override") {
+    for (key <- Seq("\"partitionOverwriteMode\"", "fs.file.impl")) {
+      val naming = main.collect { case (p, src) if src.contains(key) => p.getFileName.toString }
+      assert(naming == Seq("Connectors.scala"), key)
     }
   }
 

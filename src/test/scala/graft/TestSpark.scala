@@ -19,3 +19,25 @@ private[graft] object Codegen {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }
+
+/** The programs the JVM starts while a body runs, read from an
+  * in-process JFR recording of `jdk.ProcessStart` events: each command's
+  * first word without its directory. Filter by name: the JVM's Cleaner
+  * thread starts `rm -rf` on its own schedule. */
+private[graft] object Forks {
+  def programs(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.dump(file)
+      val events = jdk.jfr.consumer.RecordingFile.readAllEvents(file)
+      (0 until events.size).map { i =>
+        java.nio.file.Paths.get(events.get(i).getString("command").trim.split("\\s+").head)
+          .getFileName.toString
+      }
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(file); () }
+  }
+}
